@@ -5,7 +5,10 @@ edges.csv, cross-checked against DuckDB over the same file."""
 from __future__ import annotations
 
 import glob
+import os
 import random
+import subprocess
+import sys
 
 import duckdb
 import pytest
@@ -117,6 +120,34 @@ def test_cli_exact_cardinality_writes_tsv(spark, edges_csv_dir, tmp_path):
         ln for f in files for ln in open(f).read().splitlines() if ln
     )
     assert len(line.split("\t")) == 2
+
+
+def test_cli_success_prints_no_java_stack_trace(tmp_path):
+    """A cold ``python -m`` run of a reference program that succeeds
+    leaves no Java stack trace on stderr (the ``<input-dir>/*.csv`` read
+    used to log one from Spark's streaming-metadata probe of the glob)."""
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "edges.csv").write_text("1,2\n2,3\n3,1\n")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [
+            sys.executable,
+            "-m",
+            "twitter_social_triangle_mapreduce_spark",
+            "exact_cardinality",
+            str(d),
+            str(tmp_path / "out"),
+        ],
+        cwd=repo,  # ``-m`` puts the working directory on sys.path
+        env=dict(os.environ, SPARK_DRIVER_MEMORY="1g"),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "COUNT:3" in proc.stdout
+    assert "\tat " not in proc.stderr, proc.stderr[-3000:]
 
 
 def test_csv_reader_failfast_on_malformed(spark, tmp_path):

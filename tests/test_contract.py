@@ -68,6 +68,7 @@ def test_rotation_ledger():
     the driver's own records — must agree with the ledger entry for
     each round, so a future 'dropped query' alarm can be adjudicated by
     reading this file instead of re-litigating prose."""
+    import glob
     import json
     import os
 
@@ -94,10 +95,8 @@ def test_rotation_ledger():
     # the ledger matches the driver's own committed records
     prev: set[str] | None = None
     by_round = {r["round"]: r for r in ledger["rotations"]}
-    for n in range(1, 13):
-        path = os.path.join(repo, f"CORRECTNESS_r{n:02d}.json")
-        if not os.path.exists(path):
-            continue
+    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r??.json"))):
+        n = int(os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")])
         cur = set(json.load(open(path)).keys())
         if prev is not None:
             out, inn = prev - cur, cur - prev

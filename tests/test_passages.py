@@ -460,3 +460,15 @@ def test_packed_canonical_parity_and_guard(spark):
     ).select("doc_id", "start", F.lit(bytearray(16)).alias("wh"))
     with pytest.raises(Exception, match="packed-canonical bounds"):
         bad.select(passages._packed_occurrence().alias("p")).collect()
+
+
+def test_packed_canonical_guard_rejects_negative_start(spark):
+    """A negative window start is outside the pack bounds too: packed as
+    ``doc_id * 2^24 + start`` it would borrow from the doc_id bits and
+    compare below every real occurrence of that document, so it must
+    raise, not pack silently."""
+    import pytest
+
+    bad = spark.createDataFrame([(5, -1)], "doc_id long, start long")
+    with pytest.raises(Exception, match="packed-canonical bounds"):
+        bad.select(passages._packed_occurrence().alias("p")).collect()

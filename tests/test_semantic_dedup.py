@@ -1317,3 +1317,21 @@ def test_resolve_bits_memo_shares_across_independent_loads(spark, tmp_path):
     assert j1 >= 1
     b2, j2 = jobs("rbload_2", lambda: similarity._resolve_bits(None, load()))
     assert (b2, j2) == (b1, 0)
+
+
+def test_empty_centroid_set_yields_no_pairs_under_ansi(spark):
+    """An empty codebook gives every vector a null cell on the
+    single-probe fast path: the pair set is empty, and reading element 0
+    of the empty centroid array must not raise INVALID_ARRAY_INDEX when
+    ANSI mode is on."""
+    emb = _planted(spark)
+    empty = similarity.codebook_df(spark, [])
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        pairs = similarity.semantic_dedup_pairs(
+            emb, k_cells=2, dims=DIMS, centroids=empty
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert pairs == []

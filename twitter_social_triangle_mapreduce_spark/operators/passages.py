@@ -91,7 +91,7 @@ PASSAGE_STRIDE = 1
 #: serialization overhead from the operator's dominant exchange
 #: (measured at sf0.1: 8.57 → 7.27 MB/run, wall −15%). Bounds, guarded
 #: crash-not-corrupt by ``_packed_occurrence``: 0 ≤ doc_id < 2^39
-#: (5.5e11 documents) and start < 2^24 (16.7M tokens ≈ 100 MB of text
+#: (5.5e11 documents) and 0 ≤ start < 2^24 (16.7M tokens ≈ 100 MB of text
 #: in ONE document); max packed value is exactly 2^63 − 1. Corpora that
 #: genuinely exceed either bound set the conf to ``struct`` to restore
 #: the unbounded struct arm (value-identical — parity-pinned).
@@ -266,7 +266,7 @@ def _packed_occurrence():
     place = 1 << PASSAGE_PACK_START_BITS
     return F.expr(
         f"CASE WHEN doc_id >= 0 AND doc_id < {1 << (63 - PASSAGE_PACK_START_BITS)}"
-        f" AND start < {place}"
+        f" AND start >= 0 AND start < {place}"
         f" THEN doc_id * {place} + start"
         f" ELSE CAST(raise_error(concat('passages: packed-canonical bounds"
         f" exceeded (doc_id ', CAST(doc_id AS STRING), ', start ',"

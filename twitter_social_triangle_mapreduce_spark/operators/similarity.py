@@ -1057,7 +1057,9 @@ def semantic_dedup_pairs(
                 "vec_id",
                 "embedding",
                 _norm("embedding").alias("nrm"),
-                _ranked_arr_expr().getItem(0).getField("cid").alias("cell"),
+                # null-safe: an empty centroid set yields a null cell
+                # (no pairs) where ANSI getItem(0) would raise
+                F.get(_ranked_arr_expr(), 0).getField("cid").alias("cell"),
             )
             .withColumn("sig", sig)
             .repartition(F.col("cell"), F.col("sig"))

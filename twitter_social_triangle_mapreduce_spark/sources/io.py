@@ -159,8 +159,31 @@ def read_edges_csv(spark: SparkSession, path: str) -> DataFrame:
     Explicit schema → no inference pass, filters/pruning push into the scan.
     Malformed rows fail loudly (mode FAILFAST), matching the reference's
     crash-not-skip behavior on bad input (§2.7.6 — `Integer.parseInt` throws).
+
+    A glob ``path`` (the CLI passes ``<input-dir>/*.csv``) is expanded on
+    the driver first. Given a single glob string, Spark probes it for a
+    streaming sink's metadata log and logs the probe's
+    ``FileNotFoundException`` with a stack trace on every read. The
+    expansion is Hadoop's ``globStatus``, the call Spark's own resolution
+    makes, so the same files are read; a glob that matches nothing is
+    passed through and fails as before.
     """
-    return spark.read.schema(EDGE_SCHEMA).option("mode", "FAILFAST").csv(path)
+    reader = spark.read.schema(EDGE_SCHEMA).option("mode", "FAILFAST")
+    return reader.csv(_glob_paths(spark, path))
+
+
+def _glob_paths(spark: SparkSession, path: str) -> str | list[str]:
+    """The paths a Hadoop glob matches, or ``path`` itself if none (or if
+    the session is a Spark Connect client, which has no driver JVM)."""
+    if type(spark).__module__.startswith("pyspark.sql.connect"):
+        return path
+    jvm = spark.sparkContext._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(path)
+    fs = pattern.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    matches = fs.globStatus(pattern)
+    if not matches:
+        return path
+    return [m.getPath().toString() for m in matches]
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
