@@ -2,7 +2,7 @@
 """Capture `.explain("formatted")` for every declared query plus the
 bench extension entries into plans/r13/<query>_<tag>.txt.
 
-Usage: python scripts/capture_plans_r12.py <tag> [sf_dir]
+Usage: python scripts/capture_plans_r13.py <tag> [sf_dir]
   tag: "before" / "after" (file suffix)
 
 The judge cannot run Spark; these files are the evidence base for every

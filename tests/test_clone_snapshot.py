@@ -26,8 +26,13 @@ from twitter_social_triangle_mapreduce_spark.streaming import (
     ConcurrentMaintenanceError,
     ann_topk_snapshot,
     clone_snapshot,
+    compact_passage_cuts,
+    fold_cluster_batch,
+    fold_passage_batch,
     fold_semantic_batch,
     maintenance_check,
+    read_cluster_snapshot,
+    read_passage_cuts,
     read_semantic_snapshot,
 )
 
@@ -302,18 +307,54 @@ def test_inflight_spark_task_staging_is_excluded_from_the_cut(
     assert sev == {"ok"}
 
 
+def _two_fold_store(request, tmp_path, store: str) -> str:
+    """A fresh 2-fold snapshot holding the flat store ``store``: the
+    semantic store for ``embs``, a MinHash cluster store for ``bands``
+    (committed by the serving v_1), a passage store for ``windows``
+    (committed by the sibling cuts markers)."""
+    if store == "embs":
+        return request.getfixturevalue("fresh_semantic_store_2fold")
+    spark = request.getfixturevalue("spark")
+    snap = str(tmp_path / "src")
+    fold = fold_cluster_batch if store == "bands" else fold_passage_batch
+    for b, text in enumerate(
+        ("alpha beta gamma delta epsilon", "zeta eta theta iota kappa")
+    ):
+        fold(
+            spark.createDataFrame([(b, text)], "doc_id long, text string"),
+            b,
+            snap,
+        )
+    return snap
+
+
+def _read_store(spark, snap, store):
+    reader = {
+        "embs": read_semantic_snapshot,
+        "bands": read_cluster_snapshot,
+        "windows": read_passage_cuts,
+    }[store]
+    return sorted(map(tuple, reader(spark, snap).collect()))
+
+
+_PREFIX = {"embs": "b_", "bands": "b_", "windows": "w_"}
+
+
+@pytest.mark.parametrize("store", ["embs", "bands", "windows"])
 def test_vanished_uncommitted_batch_dir_is_dropped_not_fatal(
-    spark, tmp_path, fresh_semantic_store_2fold
+    spark, tmp_path, request, store
 ):
     """A fold replaying a CRASHED batch rewrites its own dir with
     mode("overwrite"), deleting the prior attempt's files — legally,
     without the lock. The cut shows the dir uncommitted (no serving
-    version covers it), so the clone drops it whole instead of
-    raising; readers never saw it at the source either (advisor
-    finding, round 11)."""
-    src = fresh_semantic_store_2fold
-    # simulate the crashed batch-2 attempt: embs written, no v_2 marker
-    crashed = os.path.join(src, "embs", "b_" + f"{2:020d}")
+    version covers embs/bands b_2, no cuts/c_2 marker commits
+    windows/w_2), so the clone drops it whole instead of raising;
+    readers never saw it at the source either (advisor finding,
+    round 11)."""
+    src = _two_fold_store(request, tmp_path, store)
+    # simulate the crashed batch-2 attempt: its dir written, no commit
+    rel = f"{store}/{_PREFIX[store]}{2:020d}"
+    crashed = os.path.join(src, rel)
     os.makedirs(crashed)
     with open(os.path.join(crashed, "part-00000.parquet"), "w") as f:
         f.write("half-written bytes from the crashed attempt")
@@ -322,25 +363,44 @@ def test_vanished_uncommitted_batch_dir_is_dropped_not_fatal(
     got = clone_snapshot(
         spark, src, dst, _after_cut=lambda: shutil.rmtree(crashed)
     )
-    assert got["skipped"] == ["embs/b_" + f"{2:020d}"]
-    assert not os.path.exists(os.path.join(dst, "embs", "b_" + f"{2:020d}"))
-    assert sorted(
-        map(tuple, read_semantic_snapshot(spark, dst).collect())
-    ) == sorted(map(tuple, read_semantic_snapshot(spark, src).collect()))
+    assert got["skipped"] == [rel]
+    assert not os.path.exists(os.path.join(dst, rel))
+    assert _read_store(spark, dst, store) == _read_store(spark, src, store)
     sev = {r["severity"] for r in maintenance_check(spark, dst).collect()}
     assert sev == {"ok"}
 
 
+@pytest.mark.parametrize(
+    "store,victim",
+    [("embs", 1), ("bands", 1), ("windows", 1), ("windows", 0)],
+    ids=["embs", "bands", "windows", "windows-after-cuts-compaction"],
+)
 def test_vanished_committed_embs_dir_still_raises(
-    spark, tmp_path, fresh_semantic_store_2fold
+    spark, tmp_path, request, store, victim
 ):
-    """The uncommitted-drop rule must not weaken the committed case: an
-    embs batch covered by a committed serving version (v_1 covers b_0
-    and b_1) vanishing is real trouble and aborts the clone."""
-    src = fresh_semantic_store_2fold
+    """The uncommitted-drop rule must not weaken the committed case: a
+    batch dir whose commit proof is in the cut vanishing is real
+    trouble and aborts the clone. embs/bands b_1 is covered by the
+    serving v_1; windows/w_1 by cuts/c_1/_APPLIED (neither store
+    carries an in-dir marker of its own). w_0 stays committed after a
+    cuts compaction folded c_0 (and its marker) into a generation: a
+    later committed cut batch proves it."""
+    src = _two_fold_store(request, tmp_path, store)
+    if victim == 0:
+        fold_passage_batch(
+            spark.createDataFrame(
+                [(2, "lam mu nu xi omicron")], "doc_id long, text string"
+            ),
+            2,
+            src,
+        )
+        assert compact_passage_cuts(spark, src) == 0
+        assert not os.path.exists(os.path.join(src, "cuts", f"c_{0:020d}"))
 
     def rogue_delete():
-        shutil.rmtree(os.path.join(src, "embs", "b_" + f"{1:020d}"))
+        shutil.rmtree(
+            os.path.join(src, store, f"{_PREFIX[store]}{victim:020d}")
+        )
 
     with pytest.raises(IOError, match="vanished mid-copy"):
         clone_snapshot(

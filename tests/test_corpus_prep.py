@@ -6,6 +6,7 @@ the oracle data cannot reach."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from twitter_social_triangle_mapreduce_spark.operators import corpus
@@ -557,6 +558,25 @@ def test_pack_shuffled_is_two_pass_on_hash_buckets(spark):
     assert plan.count("SinglePartition") == 1
     assert "hashpartitioning(__bucket" in plan
     assert plan.count("Window") == 2
+
+
+@pytest.mark.parametrize("seed", [None, "s1"])
+def test_pack_reuses_its_exchange_at_runtime(spark, seed):
+    """Both prefix-sum levels consume ONE exchange of the count
+    projection, so the corpus is scanned and tokenized once. Plan
+    digests cannot see this: AQE decides reuse at runtime, from the
+    canonical equality of the two exchange subtrees that the explicit
+    ``isNotNull`` filter and the zero-valued ``retain`` term keep
+    intact. The final plan of an executed ``pack_sequences`` must
+    therefore carry a ``ReusedExchange``."""
+    docs = load_table(spark, SF_SMOKE, "documents")
+    packed = corpus.pack_sequences(docs, shuffle_seed=seed)
+    # execute THIS DataFrame's own queryExecution so its adaptive plan
+    # is the final one
+    assert packed.collect()
+    plan = packed._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "ReusedExchange" in plan, plan[:4000]
 
 
 def test_shard_write_shuffled_keeps_layout_invariants(spark, tmp_path):

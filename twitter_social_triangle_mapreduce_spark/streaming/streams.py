@@ -1,19 +1,81 @@
-"""Structured Streaming variants of the engine's operators.
+"""Structured Streaming operators and the versioned snapshot stores
+they fold into.
 
-The reference is batch-only (SURVEY.md §1.3: no streaming anywhere); these
-are the Spark-native streaming re-expressions a production pipeline needs:
+The reference is batch-only (SURVEY.md §1.3: no streaming anywhere).
+The operators here are the Spark-native streaming re-expressions a
+production pipeline needs: windowed aggregation with a watermark,
+stream-static and stream-stream joins, sessionization, watermark dedup
+and custom state via ``applyInPandasWithState``. All readers are file
+streams over the testdata parquet, so tests run them with
+``Trigger.AvailableNow`` and a memory sink; a Kafka reader slots in the
+same way.
 
-- windowed aggregation with a watermark (late-data-tolerant rollups),
-- stream-static join (new edges closing path-2s against the known graph),
-- custom stateful processing via ``applyInPandasWithState`` (running
-  per-user counters — the arbitrary-state escape hatch).
+Stores. Each ``streaming_*`` maintenance query folds every micro-batch
+into a snapshot directory through ``foreachBatch``
+(``_start_fold_stream``). A snapshot holds up to three kinds of data:
 
-All readers are file streams over the testdata parquet so tests can run
-them with ``Trigger.AvailableNow`` and a memory sink — the same code
-would run against Kafka by swapping the reader.
+- Versioned state: ``v_<batch id>`` dirs (rollup, sketch, cluster and
+  semantic state) plus ``r_<base>_<seq>`` maintenance rewrites of a
+  base version (re-band, re-width). Each commits by an in-dir
+  ``_APPLIED`` marker; the last committed entry is the serving state.
+- Flat per-batch stores, one ``<prefix><020d id>`` dir per batch, laid
+  out by ``_BATCH_STORES``:
+
+  =======  ======  =====  ==============================================
+  sub-dir  prefix  data   a batch is committed when
+  =======  ======  =====  ==============================================
+  embs     b_      dir    a serving ``v_``/``r_`` version has id >= it
+  bands    b_      dir    a serving ``v_``/``r_`` version has id >= it
+  cuts     c_      dir    its in-dir ``_APPLIED`` marker exists
+  windows  w_      dir    a committed ``cuts/c_`` batch has id >= it
+  packs    p_      rows/  its in-dir ``_APPLIED`` marker exists
+  =======  ======  =====  ==============================================
+
+  A pack batch also carries a 1-row ``meta/`` (its tape end).
+- The ANN index: ``vectors/batch=<id>/cell=<k>/`` partitions committed
+  by central ``markers/b_<id>_APPLIED`` files, with a pinned codebook
+  and, when quantized, a pinned int8 scale.
+
+The contract below is stated once here; every fold, reader and
+maintenance function relies on it.
+
+1. Commit. A fold writes its batch's dirs, then creates its marker
+   (one atomic file create). A batch id at or below the newest
+   committed one is a replay and is skipped. A crashed attempt has no
+   marker, stays invisible to readers and is overwritten by its replay.
+   Superseded versions are pruned only after the new one commits.
+2. Compaction. A compactor folds every batch strictly below the
+   store's newest committed batch (that batch may still be replayed),
+   plus every live prior generation, into one generation ``g_<gen>``
+   sized from the sources' on-disk bytes. It writes the rows, then the
+   ledger ``compact_sources/g_<gen>`` (the source batch ids, the ids of
+   folded dirs that still exist, and ``-(g+1)`` for every prior
+   generation), then creates ``markers/g_<gen>_APPLIED``. From that
+   instant every listing reads the generation and excludes every
+   source; deleting the sources is best-effort cleanup. A crash
+   anywhere leaves invisible garbage, never duplicates or holes.
+   Listings return generations first, so a positional reader (the pack
+   fold's tape end) always sees the newest stream batch last.
+3. Maintenance. Compactors, re-band, re-width and the ANN rebuild run
+   as one ``_MaintenanceRun``: acquire the snapshot lock (a CAS create;
+   a crashed holder's lock is reclaimed after the lease, a live one is
+   kept fresh by a heartbeat), sweep crashed holders' ``_stage_*`` dirs,
+   stage bulk output in the token-unique ``_stage_<token>``, install it
+   with one fenced rename (``_MaintenanceRun.install``), flip it visible
+   with a CAS marker create (``_create_marker(cas=True)``), and finally
+   drop the stage and release the lock. A concurrent run raises
+   ``ConcurrentMaintenanceError`` before any visible mutation. Folds do
+   not take the lock: run maintenance between folds.
+4. Operations. ``maintenance_status`` counts, ``maintenance_check``
+   verifies, ``maintenance_gc`` reclaims the benign leftovers, and
+   ``clone_snapshot`` copies a marker cut. All four walk
+   ``_BATCH_STORES``; the clone drops a vanished batch dir only when the
+   table's commit proof does not hold for it.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -344,12 +406,7 @@ def streaming_dedup_against_corpus(
         )
         matches.write.mode("append").parquet(out_path)
 
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold_stream(docs_stream, process_batch, checkpoint_path)
 
 
 def with_quality_metrics(events: DataFrame, name: str = "quality") -> DataFrame:
@@ -401,37 +458,147 @@ def _rollup_fs(spark, path: str):
     return jvm, p.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
+def _start_fold_stream(stream: DataFrame, fold_batch, checkpoint_path: str):
+    """Start ``fold_batch(batch_df, batch_id)`` over every micro-batch of
+    ``stream`` as one ``availableNow`` run; returns the started
+    StreamingQuery (the caller awaits/stops it)."""
+    return (
+        stream.writeStream.foreachBatch(fold_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _create_marker(jvm, fs, path: str, cas: bool = False) -> None:
+    """Create the commit marker ``path`` — the one atomic file create
+    every commit flips on. ``cas=True`` is the maintenance flip: the
+    create refuses to overwrite, so a second writer that reached the
+    same flip raises ``ConcurrentMaintenanceError`` instead of
+    double-committing (the lock makes that single-writer already; this
+    makes a failure of it loud)."""
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    if not cas:
+        fs.create(p, True).close()
+        return
+    try:
+        fs.create(p, False).close()
+    except Exception as exc:
+        raise ConcurrentMaintenanceError(
+            f"marker {path} already exists — a concurrent maintenance"
+            " run committed it first"
+        ) from exc
+
+
 def _rollup_version_dir(snapshot_path: str, batch_id: int) -> str:
     return f"{snapshot_path}/v_{batch_id:020d}"
+
+
+def _rewrite_base(
+    spark, snapshot_path: str, what: str
+) -> tuple[list[tuple[int, int, str]], int]:
+    """``(committed state dirs, newest fold version)`` of the snapshot a
+    maintenance rewrite (re-band, re-width) supersedes; raises
+    FileNotFoundError when no version has committed."""
+    state_dirs = _semantic_state_dirs(spark, snapshot_path)
+    versions = [b for b, s, _ in state_dirs if s == 0]
+    if not versions:
+        raise FileNotFoundError(
+            f"no committed {what} snapshot under {snapshot_path}"
+        )
+    return state_dirs, versions[-1]
+
+
+def _commit_rewrite(
+    run: "_MaintenanceRun",
+    snapshot_path: str,
+    base: int,
+    state_dirs: list[tuple[int, int, str]],
+    keep_versions: int,
+    what: str,
+) -> None:
+    """Install the run's staged state as the next ``r_<base>_<seq>``
+    rewrite of version ``base``, flip it with the CAS marker, and prune
+    superseded states — never ``v_<base>`` itself. Rewrites live in a
+    namespace parallel to ``v_`` because version ids ARE stream batch
+    ids: a rewrite that took ``base + 1`` would make the stream's
+    genuinely-next batch look replayed. ``seq`` derives from COMMITTED
+    rewrites only (``state_dirs`` is listed under the lock), so a
+    crashed attempt's dir is reused by its retry."""
+    seq = max([s for b, s, _ in state_dirs if b == base] or [0]) + 1
+    rdir = f"{snapshot_path}/r_{base:020d}_{seq:04d}"
+    run.install(run.stage, rdir, f"{what} dir")
+    _create_marker(
+        run.jvm, run.fs, f"{rdir}/{ROLLUP_APPLIED_MARKER}", cas=True
+    )
+    _prune_states(
+        run.jvm,
+        run.fs,
+        [p for _, _, p in state_dirs],
+        keep_versions,
+        spare=_rollup_version_dir(snapshot_path, base),
+    )
+
+
+def _version_key(name: str) -> tuple[int, int] | None:
+    """``(base, seq)`` of a state dir name — ``v_<id>`` is ``(id, 0)``,
+    a maintenance rewrite ``r_<base>_<seq>`` is ``(base, seq)`` — or
+    None for any other name."""
+    if name.startswith("v_") and name[2:].isdigit():
+        return int(name[2:]), 0
+    if name.startswith("r_"):
+        parts = name[2:].split("_")
+        if len(parts) == 2 and all(p.isdigit() for p in parts):
+            return int(parts[0]), int(parts[1])
+    return None
 
 
 def rollup_committed_versions(spark, snapshot_path: str) -> list[int]:
     """Batch ids of all COMMITTED snapshot versions (marker present),
     ascending. Aborted writes (no marker) are invisible."""
-    jvm, fs = _rollup_fs(spark, snapshot_path)
-    root = jvm.org.apache.hadoop.fs.Path(snapshot_path)
-    if not fs.exists(root):
-        return []
-    out = []
-    for st_ in fs.listStatus(root):
-        name = st_.getPath().getName()
-        if not (st_.isDirectory() and name.startswith("v_")):
-            continue
-        marker = jvm.org.apache.hadoop.fs.Path(
-            st_.getPath(), ROLLUP_APPLIED_MARKER
-        )
-        if fs.exists(marker):
-            out.append(int(name[2:]))
-    return sorted(out)
+    return [
+        b for b, s, _ in _semantic_state_dirs(spark, snapshot_path) if s == 0
+    ]
+
+
+def _commit_version(
+    jvm, fs, vdir: str, superseded: list[str], keep_versions: int
+) -> None:
+    """Fold-side commit tail: flip ``vdir`` visible with its in-dir
+    marker, then prune the committed state dirs ``superseded`` (oldest
+    first) down to ``keep_versions`` including the new one."""
+    _create_marker(jvm, fs, f"{vdir}/{ROLLUP_APPLIED_MARKER}")
+    _prune_states(jvm, fs, superseded, keep_versions)
+
+
+def _prune_states(
+    jvm, fs, dirs: list[str], keep_versions: int, spare: str | None = None
+) -> None:
+    """Delete the oldest of the committed state ``dirs`` so that
+    ``keep_versions`` remain once one more commits — never ``spare``
+    (a rewrite keeps its base ``v_`` dir: the fold's replay check and
+    the compaction bound key off that version id)."""
+    for old in dirs[: max(0, len(dirs) + 1 - keep_versions)]:
+        if old != spare:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(old), True)
 
 
 def read_rollup_snapshot(spark, snapshot_path: str) -> DataFrame:
     """The latest COMMITTED rollup state. Raises if no version has been
     committed yet (same contract as reading a missing parquet path)."""
-    versions = rollup_committed_versions(spark, snapshot_path)
-    if not versions:
-        raise FileNotFoundError(f"no committed rollup snapshot under {snapshot_path}")
-    return spark.read.parquet(_rollup_version_dir(snapshot_path, versions[-1]))
+    return spark.read.parquet(_serving_dir(spark, snapshot_path, "rollup"))
+
+
+def _serving_dir(spark, snapshot_path: str, what: str) -> str:
+    """The serving state dir — the last committed ``v_``/``r_`` entry;
+    raises FileNotFoundError (naming the ``what`` store) when nothing
+    committed yet."""
+    dirs = _semantic_state_dirs(spark, snapshot_path)
+    if not dirs:
+        raise FileNotFoundError(
+            f"no committed {what} snapshot under {snapshot_path}"
+        )
+    return dirs[-1][2]
 
 
 def fold_rollup_batch(
@@ -440,25 +607,17 @@ def fold_rollup_batch(
     snapshot_path: str,
     keep_versions: int = 2,
 ) -> None:
-    """Fold one micro-batch into the versioned rollup snapshot.
-    Safe under ``foreachBatch``'s at-least-once delivery:
-
-    - **Idempotent replay**: a batch id ≤ the newest committed version
-      (retry after a crash that lost only the checkpoint commit) is
-      skipped — the fold never applies twice.
-    - **Atomic commit, monotonic history**: each fold writes a NEW
-      directory ``v_<batch_id>`` and commits it by creating the
-      ``_APPLIED`` marker (one atomic file create). The previous
-      committed version is never deleted or renamed mid-flight, so a
-      crash at ANY point leaves the latest committed version intact and
-      readable; a half-written ``v_<id>`` has no marker and is
-      overwritten by the retry.
-    - **First-batch detection is explicit** (committed-version listing),
-      not an exception guard — a genuinely corrupt snapshot read now
-      surfaces instead of silently resetting history.
-
-    Old committed versions beyond ``keep_versions`` are pruned only
-    AFTER the new commit succeeds."""
+    """Fold one micro-batch into the versioned rollup snapshot as a new
+    ``v_<batch_id>``. Safe under ``foreachBatch``'s at-least-once
+    delivery by the commit contract of the module docstring (item 1):
+    a replayed batch is skipped, the new version flips visible with
+    one marker create, and committed versions beyond ``keep_versions``
+    are pruned only after it. The previous version is never touched
+    mid-flight, so a crash at ANY point leaves the latest committed
+    version readable. First-batch detection is explicit (the
+    committed-version listing), not an exception guard, so a genuinely
+    corrupt snapshot read surfaces instead of silently resetting
+    history."""
     from ..operators.incremental import additive_agg_state, merge_agg_states
 
     _fold_versioned_state(
@@ -482,12 +641,12 @@ def _fold_versioned_state(
     pre_commit=None,
 ) -> None:
     """The versioned additive-state fold, generic over the state
-    algebra (round 11, extracted from ``fold_rollup_batch`` whose
-    docstring carries the crash-safety contract): ``state_fn`` maps a
-    micro-batch to its compact state relation, ``merge_fn`` folds a
-    delta state into a snapshot state. Any algebra satisfying
-    ``merge(state(A), state(B)) == state(A ∪ B)`` for disjoint splits
-    inherits the whole contract — idempotent replay, atomic
+    algebra (round 11, extracted from ``fold_rollup_batch``):
+    ``state_fn`` maps a micro-batch to its compact state relation,
+    ``merge_fn`` folds a delta state into a snapshot state. Any
+    algebra satisfying ``merge(state(A), state(B)) == state(A ∪ B)``
+    for disjoint splits inherits the whole contract — idempotent
+    replay, atomic
     marker-commit, monotonic history, prune-after-commit — without
     touching the commit protocol. Instances: the per-user rollup
     (``fold_rollup_batch``) and the Count–Min sketch
@@ -523,13 +682,9 @@ def _fold_versioned_state(
     jvm, fs = _rollup_fs(spark, snapshot_path)
     if pre_commit is not None:
         pre_commit(jvm, fs, vdir)
-    fs.create(
-        jvm.org.apache.hadoop.fs.Path(f"{vdir}/{ROLLUP_APPLIED_MARKER}"), True
-    ).close()
-    for _, _, old in state_dirs[
-        : max(0, len(state_dirs) + 1 - keep_versions)
-    ]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(old), True)
+    _commit_version(
+        jvm, fs, vdir, [p for _, _, p in state_dirs], keep_versions
+    )
 
 
 #: geometry pin for the versioned sketch store (round 12, r11 verdict
@@ -543,12 +698,9 @@ _SKETCH_GEOM_PREFIX = "_GEOM_"
 
 
 def _write_sketch_geom(jvm, fs, state_dir: str, depth: int, width: int):
-    fs.create(
-        jvm.org.apache.hadoop.fs.Path(
-            f"{state_dir}/{_SKETCH_GEOM_PREFIX}{int(depth)}_{int(width)}"
-        ),
-        True,
-    ).close()
+    _create_marker(
+        jvm, fs, f"{state_dir}/{_SKETCH_GEOM_PREFIX}{int(depth)}_{int(width)}"
+    )
 
 
 def _sketch_pinned_geom(
@@ -661,12 +813,7 @@ def read_sketch_snapshot(spark, snapshot_path: str) -> DataFrame:
     re-width rewrite, whichever committed last (flat parquet either
     way; the geometry marker and ``_APPLIED`` are underscore-invisible
     to the reader). Raises if nothing has been committed."""
-    dirs = _semantic_state_dirs(spark, snapshot_path)
-    if not dirs:
-        raise FileNotFoundError(
-            f"no committed sketch snapshot under {snapshot_path}"
-        )
-    return spark.read.parquet(dirs[-1][2])
+    return spark.read.parquet(_serving_dir(spark, snapshot_path, "sketch"))
 
 
 def rewidth_sketch_store(
@@ -706,15 +853,13 @@ def rewidth_sketch_store(
     CMS bound solved for width — ``sketches.cms_width_for``). Depth
     defaults to the pinned depth.
 
-    Crash contract — the re-band playbook verbatim: the rewrite
-    commits under the atomic-marker flip in the parallel
-    ``r_<base>_<seq>`` namespace (never consumes a stream batch id),
-    with the geometry marker written INSIDE the staged dir before the
-    rename, so state and geometry flip together; an uncommitted dir
-    is invisible and overwritten by the retry. Runs under the shared
-    maintenance lock; the loser raises ``ConcurrentMaintenanceError``
-    with the store untouched. Returns the new (depth, width), or None
-    when the store already serves at the target geometry."""
+    Crash contract — the re-band playbook: the rewrite commits as an
+    ``r_<base>_<seq>`` dir (``_commit_rewrite``) under a
+    ``_MaintenanceRun`` (module docstring, contract item 3), with the
+    geometry marker written INSIDE the staged dir before the install,
+    so state and geometry flip together. Returns the new (depth,
+    width), or None when the store already serves at the target
+    geometry."""
     from ..operators.dedup import tokens
     from ..operators.sketches import (
         CMS_DEPTH,
@@ -723,13 +868,7 @@ def rewidth_sketch_store(
         token_count_sketch,
     )
 
-    state_dirs = _semantic_state_dirs(spark, snapshot_path)
-    versions = [b for b, s, _ in state_dirs if s == 0]
-    if not versions:
-        raise FileNotFoundError(
-            f"no committed sketch snapshot under {snapshot_path}"
-        )
-    base = versions[-1]
+    state_dirs, base = _rewrite_base(spark, snapshot_path, "sketch")
     cur = _sketch_pinned_geom(spark, state_dirs) or (CMS_DEPTH, CMS_WIDTH)
     d = cur[0] if depth is None else int(depth)
     if width is not None:
@@ -745,52 +884,17 @@ def rewidth_sketch_store(
         )
     if (d, w) == cur:
         return None  # already serving at the target geometry
-    jvm, fs = _rollup_fs(spark, snapshot_path)
-    token = _acquire_maintenance_lock(spark, snapshot_path)
-    stage = f"{snapshot_path}/_stage_{token}"
-    _sweep_foreign_stages(jvm, fs, snapshot_path, token)
-    try:
+    with _MaintenanceRun(spark, snapshot_path) as run:
         # re-list under the lock: seq must reflect any rewrite that
         # committed between our first listing and the acquire
         state_dirs = _semantic_state_dirs(spark, snapshot_path)
         new_state = token_count_sketch(corpus_docs, depth=d, width=w)
-        seq = max([s for b, s, _ in state_dirs if b == base] or [0]) + 1
-        rdir = f"{snapshot_path}/r_{base:020d}_{seq:04d}"
-        new_state.write.mode("overwrite").parquet(stage)
-        _write_sketch_geom(jvm, fs, stage, d, w)
-        _assert_holds_maintenance_lock(spark, snapshot_path, token)
-        rpath = jvm.org.apache.hadoop.fs.Path(rdir)
-        if fs.exists(rpath):
-            fs.delete(rpath, True)  # crashed holder's uncommitted leftover
-        if not fs.rename(jvm.org.apache.hadoop.fs.Path(stage), rpath):
-            raise ConcurrentMaintenanceError(
-                f"could not install re-width dir {rdir} — lost a race"
-            )
-        _assert_holds_maintenance_lock(spark, snapshot_path, token)
-        try:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{rdir}/{ROLLUP_APPLIED_MARKER}"
-                ),
-                False,
-            ).close()
-        except Exception as exc:
-            raise ConcurrentMaintenanceError(
-                f"re-width marker for {rdir} already exists — a"
-                " concurrent maintenance run committed it first"
-            ) from exc
-        # prune superseded states beyond keep_versions — never
-        # v_<base> itself (it carries the version marker the fold's
-        # replay check and listing bounds key off)
-        for b, s, old in state_dirs[
-            : max(0, len(state_dirs) + 1 - keep_versions)
-        ]:
-            if b == base and s == 0:
-                continue
-            fs.delete(jvm.org.apache.hadoop.fs.Path(old), True)
+        new_state.write.mode("overwrite").parquet(run.stage)
+        _write_sketch_geom(run.jvm, run.fs, run.stage, d, w)
+        _commit_rewrite(
+            run, snapshot_path, base, state_dirs, keep_versions, "re-width"
+        )
         return (d, w)
-    finally:
-        _finish_maintenance(spark, jvm, fs, stage, snapshot_path, token)
 
 
 def streaming_sketch_maintenance(
@@ -816,12 +920,7 @@ def streaming_sketch_maintenance(
             batch_df, batch_id, snapshot_path, depth=depth, width=width
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold_stream(docs_stream, fold_batch, checkpoint_path)
 
 
 def streaming_incremental_rollup(
@@ -843,16 +942,124 @@ def streaming_incremental_rollup(
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_rollup_batch(batch_df, batch_id, snapshot_path)
 
-    return (
-        events_stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _start_fold_stream(events_stream, fold_batch, checkpoint_path)
+
+
+#: how a flat store proves that one of its batches committed (the
+#: module docstring's store table). Folds are serial and a crashed batch
+#: is replayed under its own id before the next one runs, so commits
+#: form a prefix: the version and cut proofs compare the batch id with
+#: the newest committed id of the sequence that proves them, which
+#: also covers a batch whose own cut dir a compaction has folded away.
+_PROOF_IN_DIR = "in_dir"  # the batch dir's own _APPLIED marker
+_PROOF_VERSION = "version"  # a committed v_/r_ version with id >= it
+_PROOF_CUT = "cut"  # a committed cuts/c_ batch with id >= it
+
+
+class _BatchStore(NamedTuple):
+    """One flat append-only per-batch store of a snapshot."""
+
+    sub: str  # sub-dir under the snapshot
+    prefix: str  # batch dirs are <prefix><020d batch id>
+    proof: str  # a _PROOF_* kind
+    data: str | None = None  # parquet sub-dir of a batch (None: the dir)
+    carry: str | None = None  # 1-row sub-dir a generation copies from
+    # its newest source (the pack tape end)
+
+    def parent(self, snapshot_path: str) -> str:
+        return f"{snapshot_path}/{self.sub}"
+
+    def batch_dir(self, snapshot_path: str, batch_id: int) -> str:
+        return f"{snapshot_path}/{self.sub}/{self.prefix}{batch_id:020d}"
+
+    def data_paths(self, dirs: list[str]) -> list[str]:
+        return [f"{d}/{self.data}" for d in dirs] if self.data else list(dirs)
+
+
+#: the one layout table of the flat per-batch stores, in report order
+_BATCH_STORES = {
+    s.sub: s
+    for s in (
+        _BatchStore("embs", "b_", _PROOF_VERSION),
+        _BatchStore("bands", "b_", _PROOF_VERSION),
+        _BatchStore("cuts", "c_", _PROOF_IN_DIR),
+        _BatchStore("windows", "w_", _PROOF_CUT),
+        _BatchStore("packs", "p_", _PROOF_IN_DIR, data="rows", carry="meta"),
     )
+}
+_EMBS, _BANDS, _CUTS, _WINDOWS, _PACKS = _BATCH_STORES.values()
 
 
-def _cluster_bands_dir(snapshot_path: str, batch_id: int) -> str:
-    return f"{snapshot_path}/bands/b_{batch_id:020d}"
+def _batch_id(name: str, prefix: str) -> int | None:
+    """The batch id of a ``<prefix><digits>`` dir name, else None."""
+    raw = name[len(prefix):]
+    return int(raw) if name.startswith(prefix) and raw.isdigit() else None
+
+
+def _batch_committed(
+    store: _BatchStore, batch_id: int, has_marker, newest_proof: int | None
+) -> bool:
+    """The table's commit proof for one batch. ``has_marker(rel)`` says
+    whether a snapshot-relative marker exists — on the live filesystem
+    or in a clone's marker cut; ``newest_proof`` is the newest committed
+    id of the sequence proving a version- or cut-proved store (None
+    when nothing committed)."""
+    if store.proof == _PROOF_IN_DIR:
+        rel = f"{store.sub}/{store.prefix}{batch_id:020d}"
+        return has_marker(f"{rel}/{ROLLUP_APPLIED_MARKER}")
+    return newest_proof is not None and batch_id <= newest_proof
+
+
+def _newest_proof(spark, snapshot_path: str, store: _BatchStore) -> int | None:
+    """``newest_proof`` of ``_batch_committed`` on the live filesystem:
+    the newest committed ``v_`` version or the newest committed cut
+    batch; None for an in-dir store."""
+    if store.proof == _PROOF_VERSION:
+        versions = rollup_committed_versions(spark, snapshot_path)
+        return versions[-1] if versions else None
+    if store.proof == _PROOF_CUT:
+        return _newest_committed_batch(spark, snapshot_path, _CUTS)
+    return None
+
+
+def _batch_dirs(jvm, fs, parent: str, prefix: str) -> list[tuple[int, str]]:
+    """``(batch id, path)`` of every ``<prefix><digits>`` dir directly
+    under ``parent``, ascending by id."""
+    root = jvm.org.apache.hadoop.fs.Path(parent)
+    if not fs.exists(root):
+        return []
+    out = []
+    for st_ in fs.listStatus(root):
+        name = st_.getPath().getName()
+        bid = _batch_id(name, prefix)
+        if st_.isDirectory() and bid is not None:
+            out.append((bid, f"{parent}/{name}"))
+    return sorted(out)
+
+
+def _newest_committed_batch(
+    spark, snapshot_path: str, store: _BatchStore
+) -> int | None:
+    """The store's newest batch whose commit proof holds — the one
+    compaction bound: that batch may still be replayed and stays out,
+    everything below it is safe to fold."""
+    jvm, fs = _rollup_fs(spark, snapshot_path)
+    newest = _newest_proof(spark, snapshot_path, store)
+    committed = [
+        b
+        for b, _ in _batch_dirs(
+            jvm, fs, store.parent(snapshot_path), store.prefix
+        )
+        if _batch_committed(
+            store,
+            b,
+            lambda rel: fs.exists(
+                jvm.org.apache.hadoop.fs.Path(f"{snapshot_path}/{rel}")
+            ),
+            newest,
+        )
+    ]
+    return committed[-1] if committed else None
 
 
 def _list_batch_dirs(
@@ -862,58 +1069,59 @@ def _list_batch_dirs(
     before_batch_id: int | None = None,
     marker_required: bool = False,
 ) -> list[str]:
-    """Batch-id-suffixed subdirs of ``parent`` (``<prefix><020d-id>``),
-    sorted — the shared listing behind every append-only per-batch
-    store. The listing comes from the filesystem DIRECTLY, never from
-    the committed-VERSION list, which prunes to ``keep_versions``
-    entries while these stores are append-only (deriving from it
-    silently dropped pruned batches' bands from the dedup screen —
-    review finding). ``before_batch_id`` excludes the current batch so
-    a crashed prior attempt's half-written own dir stays out of its
-    replay's input; ``marker_required`` keeps only committed dirs.
-
-    Compaction contract (round 8, r7 verdict item 3): a COMMITTED
-    generation dir (``g_<gen>`` with its ``markers/g_<gen>_APPLIED``
-    flip file — the machinery lifted from ``compact_ann_index``)
-    replaces its source batch dirs in every listing: sources are
-    excluded even if their dirs still exist (cleanup is best-effort),
-    and the generation is included regardless of ``before_batch_id``
-    — its sources all predate any live batch id by construction
-    (``_compact_batch_store`` only folds ids strictly below the
-    newest committed batch). An UNCOMMITTED generation (crash before
-    the marker) is invisible, so readers never see a half-written
-    compaction. A generation FOLDED FORWARD into a later committed
-    generation is excluded by the on-disk ``compact_sources`` ledger
-    (its ``-(gen+1)`` entry), NOT by its marker having been deleted —
-    round 9, r8 verdict item 1: relying on best-effort marker
-    deletion meant a crash between the new generation's marker commit
-    and the old marker's cleanup left BOTH visible, double-reading
-    the old rows."""
+    """The live dirs of one flat store (``<prefix><020d-id>`` under
+    ``parent``): every committed generation, then the batch dirs no
+    ledger excludes, ascending (contract item 2 of the module
+    docstring). The listing comes from the filesystem DIRECTLY, never
+    from the committed-VERSION list, which prunes to ``keep_versions``
+    while these stores are append-only (deriving from it silently
+    dropped pruned batches' bands from the dedup screen).
+    ``before_batch_id`` excludes the current batch, so a crashed prior
+    attempt's half-written own dir stays out of its replay's input;
+    generations are kept regardless, as their sources all predate any
+    live batch. ``marker_required`` keeps only batch dirs carrying an
+    in-dir marker. A generation folded forward is excluded by the
+    later generation's ledger, never by its marker having been
+    deleted, so a crash between that commit and the cleanup cannot
+    double-read it."""
     jvm, fs = _rollup_fs(spark, parent)
-    root = jvm.org.apache.hadoop.fs.Path(parent)
-    if not fs.exists(root):
+    if not fs.exists(jvm.org.apache.hadoop.fs.Path(parent)):
         return []
     _, gens, compacted_away = _gen_ledger(spark, parent)
-    out = []
-    for st_ in fs.listStatus(root):
-        name = st_.getPath().getName()
-        if not (st_.isDirectory() and name.startswith(prefix)):
-            continue
-        bid = int(name[len(prefix):])
-        if bid in compacted_away:
-            continue
-        if before_batch_id is not None and bid >= before_batch_id:
-            continue
-        if marker_required and not fs.exists(
-            jvm.org.apache.hadoop.fs.Path(st_.getPath(), ROLLUP_APPLIED_MARKER)
-        ):
-            continue
-        out.append(f"{parent}/{name}")
+    out = [
+        p
+        for bid, p in _batch_dirs(jvm, fs, parent, prefix)
+        if bid not in compacted_away
+        and (before_batch_id is None or bid < before_batch_id)
+        and not (
+            marker_required
+            and not fs.exists(
+                jvm.org.apache.hadoop.fs.Path(p, ROLLUP_APPLIED_MARKER)
+            )
+        )
+    ]
     # generations FIRST: they hold the oldest data, and consumers that
     # read positionally — fold_pack_batch takes committed[-1]/meta as
     # the live tape end — must keep seeing the NEWEST stream batch
     # last, never a compacted generation whose meta is historical
-    return [_gen_dir(parent, g) for g in gens] + sorted(out)
+    return [_gen_dir(parent, g) for g in gens] + out
+
+
+def _store_dirs(
+    spark,
+    snapshot_path: str,
+    store: _BatchStore,
+    before_batch_id: int | None = None,
+    marker_required: bool = False,
+) -> list[str]:
+    """``_list_batch_dirs`` of one ``_BATCH_STORES`` store."""
+    return _list_batch_dirs(
+        spark,
+        store.parent(snapshot_path),
+        store.prefix,
+        before_batch_id,
+        marker_required,
+    )
 
 
 def _gen_dir(parent: str, gen: int) -> str:
@@ -926,18 +1134,36 @@ def _gen_marker_path(jvm, parent: str, gen: int):
     )
 
 
-def _committed_gens(spark, parent: str) -> list[int]:
-    """Generation ids whose visibility marker committed, sorted."""
-    jvm, fs = _rollup_fs(spark, parent)
+def _marker_ids(jvm, fs, parent: str, prefix: str) -> list[int]:
+    """Ids of the committed ``<parent>/markers/<prefix><id>_APPLIED``
+    flip files, ascending."""
     root = jvm.org.apache.hadoop.fs.Path(f"{parent}/markers")
     if not fs.exists(root):
         return []
     out = []
     for st_ in fs.listStatus(root):
         name = st_.getPath().getName()
-        if name.startswith("g_") and name.endswith(ROLLUP_APPLIED_MARKER):
-            out.append(int(name[2 : -len(ROLLUP_APPLIED_MARKER)]))
+        if name.startswith(prefix) and name.endswith(ROLLUP_APPLIED_MARKER):
+            out.append(int(name[len(prefix) : -len(ROLLUP_APPLIED_MARKER)]))
     return sorted(out)
+
+
+def _committed_gens(spark, parent: str) -> list[int]:
+    """Generation ids whose visibility marker committed, sorted."""
+    jvm, fs = _rollup_fs(spark, parent)
+    return _marker_ids(jvm, fs, parent, "g_")
+
+
+def _ledger_path(parent: str, gen: int) -> str:
+    return f"{parent}/compact_sources/g_{gen:020d}"
+
+
+def _write_ledger(spark, parent: str, gen: int, srcs: list[int]) -> None:
+    """Write generation ``gen``'s source ledger — before its marker, so
+    the marker create flips data and exclusions together."""
+    spark.createDataFrame([(int(s),) for s in srcs], "src long").coalesce(
+        1
+    ).write.mode("overwrite").parquet(_ledger_path(parent, gen))
 
 
 def _gen_sources(spark, parent: str, gen: int) -> set[int]:
@@ -946,9 +1172,7 @@ def _gen_sources(spark, parent: str, gen: int) -> set[int]:
     sources parquet and never collide with batch ids ≥ 0)."""
     return {
         int(r["src"])
-        for r in spark.read.parquet(
-            f"{parent}/compact_sources/g_{gen:020d}"
-        ).collect()
+        for r in spark.read.parquet(_ledger_path(parent, gen)).collect()
     }
 
 
@@ -1337,6 +1561,30 @@ def _release_maintenance_lock(spark, lock_parent: str, token: str) -> None:
         pass  # an unreleased lock self-expires after the lease
 
 
+def _stage_parents(snapshot_path: str) -> list[str]:
+    """Every dir a maintenance run may stage under: the snapshot root
+    (versioned rewrites, the ANN index) and each flat store."""
+    return [snapshot_path] + [
+        s.parent(snapshot_path) for s in _BATCH_STORES.values()
+    ]
+
+
+def _stage_dirs(jvm, fs, snapshot_path: str) -> list[str]:
+    """Snapshot-relative ``_stage_*`` dirs under every stage parent,
+    sorted (best-effort: an unreadable parent contributes nothing)."""
+    out = []
+    for parent in _stage_parents(snapshot_path):
+        rel = parent[len(snapshot_path):].lstrip("/")
+        try:
+            for st_ in fs.listStatus(jvm.org.apache.hadoop.fs.Path(parent)):
+                name = st_.getPath().getName()
+                if st_.isDirectory() and name.startswith("_stage_"):
+                    out.append(f"{rel}/{name}".lstrip("/"))
+        except Exception:
+            pass  # absent or unreadable
+    return sorted(out)
+
+
 def _sweep_foreign_stages(jvm, fs, stage_parent: str, token: str) -> None:
     """Reclaim ``_stage_<token>`` directories left by CRASHED
     maintenance runs (review finding, round 10: the finally-block
@@ -1368,21 +1616,59 @@ def _sweep_foreign_stages(jvm, fs, stage_parent: str, token: str) -> None:
         pass
 
 
-def _finish_maintenance(
-    spark, jvm, fs, stage: str, lock_parent: str, token: str
-) -> None:
-    """Shared ``finally`` tail of every maintenance operation: reclaim
-    the run's OWN staging dir (committed output was renamed out of it;
-    anything left is garbage) and release the lock if it still carries
-    our token. One definition so the five maintenance sites cannot
-    drift apart (review finding, round 10)."""
-    try:
-        sp = jvm.org.apache.hadoop.fs.Path(stage)
-        if fs.exists(sp):
-            fs.delete(sp, True)
-    except Exception:
-        pass
-    _release_maintenance_lock(spark, lock_parent, token)
+class _MaintenanceRun:
+    """One maintenance run under the snapshot lock (contract item 3 of
+    the module docstring): entering acquires the lock at
+    ``lock_parent`` and sweeps crashed holders' ``_stage_*`` dirs under
+    ``stage_parent``; bulk output goes to the token-unique ``stage``,
+    so even a zombie writer that lost the lease can never land part
+    files in the new holder's output; leaving (always) deletes the
+    run's own stage and releases the lock if it still carries our
+    token."""
+
+    def __init__(
+        self, spark, lock_parent: str, stage_parent: str | None = None
+    ):
+        self.spark = spark
+        self.lock_parent = lock_parent
+        self.stage_parent = stage_parent or lock_parent
+        self.jvm, self.fs = _rollup_fs(spark, self.stage_parent)
+
+    def __enter__(self) -> "_MaintenanceRun":
+        self.token = _acquire_maintenance_lock(self.spark, self.lock_parent)
+        self.stage = f"{self.stage_parent}/_stage_{self.token}"
+        _sweep_foreign_stages(self.jvm, self.fs, self.stage_parent, self.token)
+        return self
+
+    def __exit__(self, *exc) -> bool:
+        try:
+            sp = self.jvm.org.apache.hadoop.fs.Path(self.stage)
+            if self.fs.exists(sp):
+                self.fs.delete(sp, True)
+        except Exception:
+            pass
+        _release_maintenance_lock(self.spark, self.lock_parent, self.token)
+        return False
+
+    def assert_held(self) -> None:
+        _assert_holds_maintenance_lock(
+            self.spark, self.lock_parent, self.token
+        )
+
+    def install(self, src: str, dest: str, what: str) -> None:
+        """The one install step: fence, drop a crashed holder's
+        uncommitted ``dest`` (targets are always max committed + 1, so
+        a committed dir can't be there), rename the staged ``src`` into
+        place or raise, fence again."""
+        Path = self.jvm.org.apache.hadoop.fs.Path
+        self.assert_held()
+        if self.fs.exists(Path(dest)):
+            self.fs.delete(Path(dest), True)
+        if not self.fs.rename(Path(src), Path(dest)):
+            raise ConcurrentMaintenanceError(
+                f"could not install {what} {dest} — lost a race"
+            )
+        self.assert_held()
 
 
 def _commit_generation(
@@ -1393,42 +1679,27 @@ def _commit_generation(
     folded_batch_ids: set[int],
     all_gens: list[int],
 ) -> None:
-    """Steps 2–3 of the compaction contract, shared by every layout:
-    write the ledger (``compact_sources/g_<gen>``) and flip visibility
-    with the atomic marker create. The ledger lists the DIRECT source
-    batch ids, the already-folded batch ids whose dirs STILL EXIST on
-    disk (``folded_batch_ids`` — carried forward because step 4
-    deletes the stale ledgers, and a source batch dir whose own
-    deletion failed in an earlier crash would otherwise lose its only
-    excluder and resurface as live data, permanently duplicating its
-    rows on the next compaction — review finding, round 9; only the
-    OBSERVED leftovers are carried, never the full folded history, so
-    ledger size stays bounded by live sources + crash leftovers over
-    a long-lived stream — a successfully-deleted batch id can never
-    be re-written, because the newest batch is excluded from
-    compaction precisely so replays cannot collide with folded ids),
-    and ``-(g+1)`` for EVERY stale generation, so one committed row
-    excludes each of them single-hop."""
+    """Write generation ``gen``'s ledger and flip it visible with the
+    CAS marker create (contract item 2). The ledger lists the DIRECT
+    source batch ids, the already-folded batch ids whose dirs STILL
+    EXIST (``folded_batch_ids`` — the stale ledgers are deleted at
+    cleanup, and a folded dir whose own delete failed would otherwise
+    lose its only excluder and resurface as live data; only observed
+    leftovers are carried, so the ledger stays bounded over a
+    long-lived stream), and ``-(g+1)`` for EVERY prior generation, so
+    one committed row excludes each of them single-hop."""
     jvm, fs = _rollup_fs(spark, parent)
-    srcs = (
-        [(int(b),) for b in batch_ids]
-        + [(int(b),) for b in sorted(folded_batch_ids)]
-        + [(-(int(g) + 1),) for g in all_gens]
+    _write_ledger(
+        spark,
+        parent,
+        gen,
+        list(batch_ids)
+        + sorted(folded_batch_ids)
+        + [-(int(g) + 1) for g in all_gens],
     )
-    spark.createDataFrame(srcs, "src long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{parent}/compact_sources/g_{gen:020d}")
-    # overwrite=False: the flip is a CAS — double-committing the same
-    # generation id is structurally impossible even if two writers
-    # somehow got this far (round 10; the lock makes reaching here
-    # single-writer, this makes the failure loud if it ever isn't)
-    try:
-        fs.create(_gen_marker_path(jvm, parent, gen), False).close()
-    except Exception as exc:
-        raise ConcurrentMaintenanceError(
-            f"generation marker g_{gen} already exists under {parent} —"
-            " a concurrent maintenance run committed it first"
-        ) from exc
+    _create_marker(
+        jvm, fs, _gen_marker_path(jvm, parent, gen).toString(), cas=True
+    )
 
 
 def _cleanup_compacted(
@@ -1464,10 +1735,7 @@ def _cleanup_compacted(
                 jvm.org.apache.hadoop.fs.Path(_gen_dir(parent, g)), True
             )
             fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{parent}/compact_sources/g_{g:020d}"
-                ),
-                True,
+                jvm.org.apache.hadoop.fs.Path(_ledger_path(parent, g)), True
             )
         except Exception:
             pass  # best-effort; invisible garbage, retried next run
@@ -1480,72 +1748,39 @@ def _compact_batch_store(
     max_batch_exclusive: int,
     target_file_mb: int = 256,
     lock_parent: str | None = None,
+    data: str | None = None,
+    carry: str | None = None,
 ) -> int | None:
-    """Shared small-files maintenance fold for the flat append-only
-    per-batch stores (semantic ``embs/``, MinHash ``bands/``, passage
-    ``windows/`` — the same growth ``compact_ann_index`` fixed for the
-    ANN index, generalized per r7 verdict item 3): every ingest fold
-    appends one directory, so a long-running stream accumulates files
-    linear in fold count and fold-time listings/scans with them.
-    Rewrites all SAFE batch dirs — ids strictly below
-    ``max_batch_exclusive`` (the caller passes the newest committed
-    batch id, which stays out for replay safety, mirroring the ANN
-    compactor's newest-exclusion) — plus every prior committed
-    generation into ONE new generation sized from the sources' actual
-    on-disk bytes, then flips visibility atomically:
-
-    1. write the merged rows under ``g_<gen>``;
-    2. write the source list (``compact_sources/g_<gen>`` — batch ids,
-       plus EVERY stale generation encoded as ``-(gen+1)``: live
-       prior generations folded as data sources AND already-folded
-       leftovers whose markers a crashed cleanup left behind);
-    3. create ``markers/g_<gen>_APPLIED`` — the atomic flip:
-       ``_gen_ledger`` now excludes every source (batch dirs by id,
-       stale generations by their ``-(gen+1)`` entry) the instant the
-       marker exists;
-    4. best-effort cleanup of source dirs/markers (a crash here leaves
-       invisible garbage, never duplicates or holes — exclusion is
-       authoritative from the step-2 ledger, round 9 / r8 verdict
-       item 1, so a surviving old marker changes nothing).
-
-    Replay-idempotent exactly like the ANN compactor: a crash before
-    step 3 leaves the half-written generation invisible and the next
-    run overwrites the same paths; a re-run after commit folds the
-    prior generation forward or no-ops below two sources. Run it
-    BETWEEN folds (the foreachBatch serialization point) — it must not
-    race a fold reading the dirs it deletes. Compactor-vs-compactor
-    exclusion is ENFORCED (round 10, r9 verdict item 1): the run takes
-    the snapshot's maintenance lock before listing, stages the merged
-    rows in a token-unique directory, re-checks ownership before the
-    rename and before the marker flip, and a concurrent invocation
-    raises ``ConcurrentMaintenanceError`` with the store untouched.
-    Returns the new generation id, or None when there was nothing to
-    compact."""
+    """Small-files maintenance fold shared by every flat append-only
+    per-batch store: each ingest fold appends one directory, so a
+    long-running stream accumulates files linear in fold count, and
+    fold-time listings and scans with them. Rewrites the batch dirs
+    with ids strictly below ``max_batch_exclusive`` plus every live
+    prior generation into ONE new generation of files sized from the
+    sources' on-disk bytes (``target_file_mb``), then commits it under
+    contract items 2 and 3 of the module docstring. ``data`` names the
+    parquet sub-dir of each source (``rows`` for packs; sizing reads
+    its bytes), and ``carry`` a 1-row sub-dir the generation copies
+    from its newest source (the pack tape end ``meta``). Run it
+    between folds: it must not race a fold reading the dirs it
+    deletes. Returns the new generation id, or None when there were
+    fewer than two sources."""
     import math
 
-    jvm, fs = _rollup_fs(spark, parent)
     lockp = lock_parent if lock_parent is not None else parent
-    token = _acquire_maintenance_lock(spark, lockp)
-    stage = f"{parent}/_stage_{token}"
-    _sweep_foreign_stages(jvm, fs, parent, token)
-    try:
+    with _MaintenanceRun(spark, lockp, parent) as run:
+        jvm, fs = run.jvm, run.fs
         all_gens, live_gens, already = _gen_ledger(spark, parent)
         batch_dirs: list[tuple[int, str]] = []
         stale_dirs: list[tuple[int, str]] = []
-        root = jvm.org.apache.hadoop.fs.Path(parent)
-        if fs.exists(root):
-            for st_ in fs.listStatus(root):
-                name = st_.getPath().getName()
-                if st_.isDirectory() and name.startswith(prefix):
-                    bid = int(name[len(prefix):])
-                    if bid in already:
-                        # leftover source dir an earlier crashed cleanup
-                        # never deleted — already excluded by the ledger;
-                        # carried into the new ledger and retried below
-                        stale_dirs.append((bid, f"{parent}/{name}"))
-                    elif bid < max_batch_exclusive:
-                        batch_dirs.append((bid, f"{parent}/{name}"))
-        batch_dirs.sort()
+        for bid, path in _batch_dirs(jvm, fs, parent, prefix):
+            if bid in already:
+                # leftover source dir an earlier crashed cleanup never
+                # deleted — already excluded by the ledger; carried
+                # into the new ledger and retried below
+                stale_dirs.append((bid, path))
+            elif bid < max_batch_exclusive:
+                batch_dirs.append((bid, path))
         # data sources are the LIVE generations only — a folded-forward
         # generation's rows already live inside a later one, and reading
         # it again is exactly the duplicate-baking the ledger forbids
@@ -1555,29 +1790,28 @@ def _compact_batch_store(
         if len(src_paths) < 2:
             return None
         gen = (all_gens[-1] + 1) if all_gens else 0
-        total_bytes = 0
-        for p in src_paths:
-            total_bytes += fs.getContentSummary(
-                jvm.org.apache.hadoop.fs.Path(p)
-            ).getLength()
-        n_files = max(1, math.ceil(total_bytes / (target_file_mb * 2**20)))
-        merged = spark.read.parquet(*src_paths).repartition(n_files)
-        # token-unique staging: even a zombie writer that lost the
-        # lease can never land part files inside the new holder's
-        # generation directory — its job output stays in its own
-        # staging, which the finally-block reclaims
-        merged.write.mode("overwrite").parquet(stage)
-        _assert_holds_maintenance_lock(spark, lockp, token)
-        dest = jvm.org.apache.hadoop.fs.Path(_gen_dir(parent, gen))
-        if fs.exists(dest):
-            # uncommitted leftover of a CRASHED holder (gen is always
-            # max committed + 1, so a committed dir can't be here)
-            fs.delete(dest, True)
-        if not fs.rename(jvm.org.apache.hadoop.fs.Path(stage), dest):
-            raise ConcurrentMaintenanceError(
-                f"could not install generation dir {dest} — lost a race"
+        data_paths = [f"{p}/{data}" if data else p for p in src_paths]
+        n_files = max(
+            1,
+            math.ceil(
+                _dir_bytes(jvm, fs, data_paths) / (target_file_mb * 2**20)
+            ),
+        )
+        spark.read.parquet(*data_paths).repartition(n_files).write.mode(
+            "overwrite"
+        ).parquet(f"{run.stage}/{data}" if data else run.stage)
+        if carry:
+            # batch dirs always outrank prior generations: a
+            # generation's sources predate every later stream batch
+            newest_src = (
+                batch_dirs[-1][1]
+                if batch_dirs
+                else _gen_dir(parent, live_gens[-1])
             )
-        _assert_holds_maintenance_lock(spark, lockp, token)
+            spark.read.parquet(f"{newest_src}/{carry}").coalesce(
+                1
+            ).write.mode("overwrite").parquet(f"{run.stage}/{carry}")
+        run.install(run.stage, _gen_dir(parent, gen), "generation dir")
         _commit_generation(
             spark,
             parent,
@@ -1593,8 +1827,35 @@ def _compact_batch_store(
             all_gens,
         )
         return gen
-    finally:
-        _finish_maintenance(spark, jvm, fs, stage, lockp, token)
+
+
+def _dir_bytes(jvm, fs, paths: list[str]) -> int:
+    """Total on-disk bytes under ``paths`` — the compaction sizing
+    input."""
+    return sum(
+        fs.getContentSummary(jvm.org.apache.hadoop.fs.Path(p)).getLength()
+        for p in paths
+    )
+
+
+def _compact_store(
+    spark, snapshot_path: str, store: _BatchStore, target_file_mb: int
+) -> int | None:
+    """Compact one ``_BATCH_STORES`` store below its newest committed
+    batch."""
+    newest = _newest_committed_batch(spark, snapshot_path, store)
+    if newest is None:
+        return None
+    return _compact_batch_store(
+        spark,
+        store.parent(snapshot_path),
+        store.prefix,
+        newest,
+        target_file_mb,
+        lock_parent=snapshot_path,
+        data=store.data,
+        carry=store.carry,
+    )
 
 
 def compact_semantic_embs(
@@ -1603,20 +1864,10 @@ def compact_semantic_embs(
     """Compact the semantic snapshot's append-only embeddings store
     (``embs/b_<id>`` — one dir per fold; the corpus embeddings ARE the
     collision index, so every fold scans this union) into one
-    generation; see ``_compact_batch_store`` for the contract. Safe
-    sources are all batches strictly below the newest committed
-    version."""
-    versions = rollup_committed_versions(spark, snapshot_path)
-    if not versions:
-        return None
-    return _compact_batch_store(
-        spark,
-        f"{snapshot_path}/embs",
-        "b_",
-        versions[-1],
-        target_file_mb,
-        lock_parent=snapshot_path,
-    )
+    generation. Safe sources are the batches strictly below the newest
+    committed one (module docstring, contract item 2). Returns the new
+    generation id, or None when there was nothing to compact."""
+    return _compact_store(spark, snapshot_path, _EMBS, target_file_mb)
 
 
 def compact_cluster_bands(
@@ -1624,203 +1875,48 @@ def compact_cluster_bands(
 ) -> int | None:
     """Compact the MinHash cluster snapshot's band-signature index
     (``bands/b_<id>`` — the collision-probe side of every fold); see
-    ``_compact_batch_store``."""
-    versions = rollup_committed_versions(spark, snapshot_path)
-    if not versions:
-        return None
-    return _compact_batch_store(
-        spark,
-        f"{snapshot_path}/bands",
-        "b_",
-        versions[-1],
-        target_file_mb,
-        lock_parent=snapshot_path,
-    )
-
-
-def _max_committed_batch(spark, parent: str, prefix: str) -> int | None:
-    """Highest batch id under ``parent`` whose IN-DIR marker committed
-    (the passage-cut / pack stores commit per-batch, not per-version).
-    None when nothing committed."""
-    jvm, fs = _rollup_fs(spark, parent)
-    root = jvm.org.apache.hadoop.fs.Path(parent)
-    if not fs.exists(root):
-        return None
-    ids = [
-        int(st_.getPath().getName()[len(prefix):])
-        for st_ in fs.listStatus(root)
-        if st_.isDirectory()
-        and st_.getPath().getName().startswith(prefix)
-        and fs.exists(
-            jvm.org.apache.hadoop.fs.Path(
-                st_.getPath(), ROLLUP_APPLIED_MARKER
-            )
-        )
-    ]
-    return max(ids) if ids else None
+    ``compact_semantic_embs``."""
+    return _compact_store(spark, snapshot_path, _BANDS, target_file_mb)
 
 
 def compact_passage_cuts(
     spark, snapshot_path: str, target_file_mb: int = 256
 ) -> int | None:
     """Compact the passage snapshot's committed cut lists
-    (``cuts/c_<id>`` — flat parquet per batch, in-dir marker hidden
-    from scans); see ``_compact_batch_store``. The newest COMMITTED
-    batch is the exclusion bound, so an uncommitted crash-leftover dir
-    (always the highest id — folds are serial) is never absorbed into
-    a generation its replay would then duplicate."""
-    newest = _max_committed_batch(spark, f"{snapshot_path}/cuts", "c_")
-    if newest is None:
-        return None
-    return _compact_batch_store(
-        spark,
-        f"{snapshot_path}/cuts",
-        "c_",
-        newest,
-        target_file_mb,
-        lock_parent=snapshot_path,
-    )
+    (``cuts/c_<id>``); see ``compact_semantic_embs``. An uncommitted
+    crash-leftover dir is always above the newest committed batch
+    (folds are serial), so it is never absorbed into a generation its
+    replay would then duplicate."""
+    return _compact_store(spark, snapshot_path, _CUTS, target_file_mb)
 
 
 def compact_pack_rows(
     spark, snapshot_path: str, target_file_mb: int = 256
 ) -> int | None:
     """Compact the packed-tape snapshot's per-batch dirs
-    (``packs/p_<id>`` — ``rows/`` + 1-row ``meta/`` each, in-dir
-    marker): merge the safe batches' ``rows`` into one generation
-    whose ``meta`` copies its NEWEST source's tape end (the generation
-    is self-consistent, though the live tape end always comes from the
-    newest stream batch — ``_list_batch_dirs`` returns generations
-    FIRST precisely so ``committed[-1]/meta`` keeps meaning that).
-    Same ledger/flip/cleanup contract as ``_compact_batch_store``
-    (including the round-9 authoritative read-side exclusion of
-    folded-forward generations); custom body because of the rows/meta
-    subdir layout."""
-    import math
-
-    parent = f"{snapshot_path}/packs"
-    jvm, fs = _rollup_fs(spark, parent)
-    newest = _max_committed_batch(spark, parent, "p_")
-    if newest is None:
-        return None
-    token = _acquire_maintenance_lock(spark, snapshot_path)
-    stage = f"{parent}/_stage_{token}"
-    _sweep_foreign_stages(jvm, fs, parent, token)
-    try:
-        all_gens, live_gens, already = _gen_ledger(spark, parent)
-        batch_dirs: list[tuple[int, str]] = []
-        stale_dirs: list[tuple[int, str]] = []
-        root = jvm.org.apache.hadoop.fs.Path(parent)
-        for st_ in fs.listStatus(root):
-            name = st_.getPath().getName()
-            if st_.isDirectory() and name.startswith("p_"):
-                bid = int(name[2:])
-                if bid in already:
-                    stale_dirs.append((bid, f"{parent}/{name}"))  # carried
-                elif bid < newest:
-                    batch_dirs.append((bid, f"{parent}/{name}"))
-        batch_dirs.sort()
-        src_paths = [p for _, p in batch_dirs] + [
-            _gen_dir(parent, g) for g in live_gens
-        ]
-        if len(src_paths) < 2:
-            return None
-        gen = (all_gens[-1] + 1) if all_gens else 0
-        total_bytes = 0
-        for p in src_paths:
-            total_bytes += fs.getContentSummary(
-                jvm.org.apache.hadoop.fs.Path(f"{p}/rows")
-            ).getLength()
-        n_files = max(1, math.ceil(total_bytes / (target_file_mb * 2**20)))
-        merged = spark.read.parquet(*[f"{p}/rows" for p in src_paths])
-        merged.repartition(n_files).write.mode("overwrite").parquet(
-            f"{stage}/rows"
-        )
-        # the generation's meta = its newest source's tape end (batch
-        # dirs always outrank prior generations — a generation's sources
-        # predate every later stream batch by construction)
-        newest_src = (
-            batch_dirs[-1][1]
-            if batch_dirs
-            else _gen_dir(parent, live_gens[-1])
-        )
-        spark.read.parquet(f"{newest_src}/meta").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{stage}/meta")
-        _assert_holds_maintenance_lock(spark, snapshot_path, token)
-        dest = jvm.org.apache.hadoop.fs.Path(_gen_dir(parent, gen))
-        if fs.exists(dest):
-            fs.delete(dest, True)  # crashed holder's uncommitted leftover
-        if not fs.rename(jvm.org.apache.hadoop.fs.Path(stage), dest):
-            raise ConcurrentMaintenanceError(
-                f"could not install generation dir {dest} — lost a race"
-            )
-        _assert_holds_maintenance_lock(spark, snapshot_path, token)
-        _commit_generation(
-            spark,
-            parent,
-            gen,
-            [b for b, _ in batch_dirs],
-            {b for b, _ in stale_dirs},
-            all_gens,
-        )
-        _cleanup_compacted(
-            spark,
-            parent,
-            [p for _, p in batch_dirs] + [p for _, p in stale_dirs],
-            all_gens,
-        )
-        return gen
-    finally:
-        _finish_maintenance(spark, jvm, fs, stage, snapshot_path, token)
+    (``packs/p_<id>`` — ``rows/`` + 1-row ``meta/`` each): the safe
+    batches' ``rows`` merge into one generation whose ``meta`` copies
+    its NEWEST source's tape end. The generation is self-consistent,
+    though the live tape end always comes from the newest stream batch
+    (listings return generations FIRST, so ``committed[-1]/meta`` keeps
+    meaning that). See ``compact_semantic_embs``."""
+    return _compact_store(spark, snapshot_path, _PACKS, target_file_mb)
 
 
 def compact_passage_windows(
     spark, snapshot_path: str, target_file_mb: int = 256
 ) -> int | None:
     """Compact the passage snapshot's window index (``windows/w_<id>``);
-    see ``_compact_batch_store``. The passage fold commits per-batch
-    dirs (no version markers), so the newest batch dir plays the
-    replay-safety exclusion role."""
-    jvm, fs = _rollup_fs(spark, snapshot_path)
-    root = jvm.org.apache.hadoop.fs.Path(f"{snapshot_path}/windows")
-    if not fs.exists(root):
-        return None
-    ids = [
-        int(st_.getPath().getName()[2:])
-        for st_ in fs.listStatus(root)
-        if st_.isDirectory() and st_.getPath().getName().startswith("w_")
-    ]
-    if not ids:
-        return None
-    return _compact_batch_store(
-        spark,
-        f"{snapshot_path}/windows",
-        "w_",
-        max(ids),
-        target_file_mb,
-        lock_parent=snapshot_path,
-    )
-
-
-def _cluster_band_dirs(spark, snapshot_path: str, before_batch_id: int) -> list[str]:
-    """Band dirs with batch id < ``before_batch_id`` (see
-    ``_list_batch_dirs`` for the append-only listing contract)."""
-    return _list_batch_dirs(
-        spark, f"{snapshot_path}/bands", "b_", before_batch_id
-    )
+    a window batch commits with its sibling cut list. See
+    ``compact_semantic_embs``."""
+    return _compact_store(spark, snapshot_path, _WINDOWS, target_file_mb)
 
 
 def read_cluster_snapshot(spark, snapshot_path: str) -> DataFrame:
     """The latest COMMITTED cluster state (doc_id, cluster_id,
     is_canonical). Raises if no version has been committed yet."""
-    versions = rollup_committed_versions(spark, snapshot_path)
-    if not versions:
-        raise FileNotFoundError(
-            f"no committed cluster snapshot under {snapshot_path}"
-        )
     return spark.read.parquet(
-        f"{_rollup_version_dir(snapshot_path, versions[-1])}/state"
+        f"{_serving_dir(spark, snapshot_path, 'cluster')}/state"
     )
 
 
@@ -1860,27 +1956,25 @@ def fold_cluster_batch(
         state = spark.read.parquet(
             f"{_rollup_version_dir(snapshot_path, versions[-1])}/state"
         )
-        band_dirs = _cluster_band_dirs(spark, snapshot_path, batch_id)
-        bands = spark.read.parquet(*band_dirs)
+        bands = spark.read.parquet(
+            *_store_dirs(spark, snapshot_path, _BANDS, batch_id)
+        )
         new_state = update_near_dup_clusters(state, bands, batch_df)
     else:
         new_state = near_dup_clusters(batch_df)
     minhash_bands(batch_df).write.mode("overwrite").parquet(
-        _cluster_bands_dir(snapshot_path, batch_id)
+        _BANDS.batch_dir(snapshot_path, batch_id)
     )
     vdir = _rollup_version_dir(snapshot_path, batch_id)
     new_state.write.mode("overwrite").parquet(f"{vdir}/state")
     jvm, fs = _rollup_fs(spark, snapshot_path)
-    fs.create(
-        jvm.org.apache.hadoop.fs.Path(f"{vdir}/{ROLLUP_APPLIED_MARKER}"), True
-    ).close()
-    for old in versions[: max(0, len(versions) + 1 - keep_versions)]:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(
-                _rollup_version_dir(snapshot_path, old)
-            ),
-            True,
-        )
+    _commit_version(
+        jvm,
+        fs,
+        vdir,
+        [_rollup_version_dir(snapshot_path, v) for v in versions],
+        keep_versions,
+    )
 
 
 def streaming_cluster_maintenance(
@@ -1899,30 +1993,16 @@ def streaming_cluster_maintenance(
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_cluster_batch(batch_df, batch_id, snapshot_path)
 
-    return (
-        docs_stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _semantic_embs_dir(snapshot_path: str, batch_id: int) -> str:
-    return f"{snapshot_path}/embs/b_{batch_id:020d}"
+    return _start_fold_stream(docs_stream, fold_batch, checkpoint_path)
 
 
 def _semantic_state_dirs(
     spark, snapshot_path: str
 ) -> list[tuple[int, int, str]]:
-    """All COMMITTED cluster-state dirs of a semantic snapshot,
-    ascending by ``(base_version, reband_seq)``: fold versions
-    ``v_<id>`` at seq 0, interleaved with re-band maintenance rewrites
-    ``r_<base>_<seq>`` (seq ≥ 1) of a base version — the LAST entry is
-    the serving state. Re-bands live in a parallel namespace (round 9,
-    r8 verdict item 3) because version ids ARE stream batch ids: the
-    fold's replayed-batch check compares ``versions[-1]`` against the
-    incoming batch id, so a re-band that consumed ``base + 1`` would
-    make the stream's genuinely-next batch look replayed and drop it."""
+    """All COMMITTED state dirs of a versioned snapshot as ``(base,
+    seq, path)``, ascending: fold versions ``v_<id>`` at seq 0,
+    interleaved with maintenance rewrites ``r_<base>_<seq>`` (see
+    ``_commit_rewrite``) — the LAST entry is the serving state."""
     jvm, fs = _rollup_fs(spark, snapshot_path)
     root = jvm.org.apache.hadoop.fs.Path(snapshot_path)
     if not fs.exists(root):
@@ -1930,16 +2010,8 @@ def _semantic_state_dirs(
     out = []
     for st_ in fs.listStatus(root):
         name = st_.getPath().getName()
-        if not st_.isDirectory():
-            continue
-        if name.startswith("v_"):
-            key = (int(name[2:]), 0)
-        elif name.startswith("r_"):
-            base, seq = name[2:].split("_")
-            key = (int(base), int(seq))
-        else:
-            continue
-        if fs.exists(
+        key = _version_key(name)
+        if st_.isDirectory() and key is not None and fs.exists(
             jvm.org.apache.hadoop.fs.Path(
                 st_.getPath(), ROLLUP_APPLIED_MARKER
             )
@@ -1989,12 +2061,9 @@ def read_semantic_snapshot(spark, snapshot_path: str) -> DataFrame:
     """The latest COMMITTED semantic-cluster state (vec_id, cluster_id,
     is_canonical) — the newest fold version OR re-band rewrite,
     whichever committed last. Raises if nothing has been committed."""
-    dirs = _semantic_state_dirs(spark, snapshot_path)
-    if not dirs:
-        raise FileNotFoundError(
-            f"no committed semantic snapshot under {snapshot_path}"
-        )
-    return spark.read.parquet(f"{dirs[-1][2]}/state")
+    return spark.read.parquet(
+        f"{_serving_dir(spark, snapshot_path, 'semantic')}/state"
+    )
 
 
 def fold_semantic_batch(
@@ -2083,12 +2152,9 @@ def fold_semantic_batch(
         # first-fold detection for pre-round-9 tooling); the
         # authoritative copy now travels with each state dir
         _write_bits_pin(spark, f"{snapshot_path}/lsh_bits", pinned)
-        fs.create(
-            jvm.org.apache.hadoop.fs.Path(
-                f"{snapshot_path}/lsh_bits{ROLLUP_APPLIED_MARKER}"
-            ),
-            True,
-        ).close()
+        _create_marker(
+            jvm, fs, f"{snapshot_path}/lsh_bits{ROLLUP_APPLIED_MARKER}"
+        )
     if bits is not None and int(bits) != pinned:
         raise ValueError(
             f"fold_semantic_batch: caller requested bits={bits} but the"
@@ -2101,10 +2167,9 @@ def fold_semantic_batch(
     dedup_kwargs["bits"] = pinned
     if versions:
         state = spark.read.parquet(f"{state_dirs[-1][2]}/state")
-        emb_dirs = _list_batch_dirs(
-            spark, f"{snapshot_path}/embs", "b_", batch_id
+        corpus = spark.read.parquet(
+            *_store_dirs(spark, snapshot_path, _EMBS, batch_id)
         )
-        corpus = spark.read.parquet(*emb_dirs)
         new_state = update_semantic_clusters(
             state, corpus, batch_df, centroids=centroids, **dedup_kwargs
         )
@@ -2113,20 +2178,15 @@ def fold_semantic_batch(
             batch_df, centroids=centroids, **dedup_kwargs
         )
     batch_df.write.mode("overwrite").parquet(
-        _semantic_embs_dir(snapshot_path, batch_id)
+        _EMBS.batch_dir(snapshot_path, batch_id)
     )
     vdir = _rollup_version_dir(snapshot_path, batch_id)
     new_state.write.mode("overwrite").parquet(f"{vdir}/state")
     _write_bits_pin(spark, f"{vdir}/bits", pinned)
-    fs.create(
-        jvm.org.apache.hadoop.fs.Path(f"{vdir}/{ROLLUP_APPLIED_MARKER}"), True
-    ).close()
-    # prune superseded state dirs (fold versions AND re-band rewrites,
-    # uniformly ordered) beyond keep_versions — only after the commit
-    for _, _, old in state_dirs[
-        : max(0, len(state_dirs) + 1 - keep_versions)
-    ]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(old), True)
+    # prunes fold versions AND re-band rewrites, uniformly ordered
+    _commit_version(
+        jvm, fs, vdir, [p for _, _, p in state_dirs], keep_versions
+    )
 
 
 def reband_semantic_store(
@@ -2156,38 +2216,23 @@ def reband_semantic_store(
     corpus embeddings ARE the index (signatures derive from them at
     fold time).
 
-    Crash contract: the rewrite commits under the same atomic-marker
-    flip as every fold, in a parallel ``r_<base>_<seq>`` namespace
-    (see ``_semantic_state_dirs`` — a re-band must never consume a
-    stream batch id) with the new width recorded INSIDE the committed
-    dir, so state and width flip together; a crash leaves either the
-    old state at the old width or the new state at the new width,
-    never a mix, and an uncommitted re-band dir is invisible and
-    overwritten by the retry (seq derives from COMMITTED re-bands
-    only).
-
-    Run it BETWEEN folds, like the compactors. Concurrent maintenance
-    on the same snapshot is rejected via the shared maintenance lock
-    (round 10 — see ``_acquire_maintenance_lock``); the loser raises
-    ``ConcurrentMaintenanceError`` with the store untouched. Returns
-    the new width, or None when the store already serves at the target
-    width."""
+    Crash contract: the rewrite commits as an ``r_<base>_<seq>`` dir
+    (``_commit_rewrite`` — a re-band must never consume a stream batch
+    id) under a ``_MaintenanceRun`` (module docstring, contract item
+    3), with the new width recorded INSIDE the committed dir, so a
+    crash leaves either the old state at the old width or the new
+    state at the new width, never a mix. Run it BETWEEN folds, like
+    the compactors. Returns the new width, or None when the store
+    already serves at the target width."""
     from ..operators.similarity import lsh_bits_for, semantic_dedup_clusters
 
-    state_dirs = _semantic_state_dirs(spark, snapshot_path)
-    versions = [b for b, s, _ in state_dirs if s == 0]
-    if not versions:
-        raise FileNotFoundError(
-            f"no committed semantic snapshot under {snapshot_path}"
-        )
-    base = versions[-1]
+    state_dirs, base = _rewrite_base(spark, snapshot_path, "semantic")
     # committed embeddings only: embs/b_<id> commits with v_<id>, so a
     # crashed fold's orphan embs dir (id > base) must stay out — its
     # batch will re-fold and must not find itself pre-counted
-    emb_dirs = _list_batch_dirs(
-        spark, f"{snapshot_path}/embs", "b_", base + 1
+    corpus = spark.read.parquet(
+        *_store_dirs(spark, snapshot_path, _EMBS, base + 1)
     )
-    corpus = spark.read.parquet(*emb_dirs)
     if "dims" not in dedup_kwargs:
         # the store knows its own embedding width — derive it so the
         # maintenance job can run from a shell (CLI ``maintain``)
@@ -2206,92 +2251,45 @@ def reband_semantic_store(
     bits = int(bits)
     if pinned is not None and bits == pinned:
         return None  # already serving at the target width
-    jvm, fs = _rollup_fs(spark, snapshot_path)
     # maintenance lock (round 10, r9 verdict item 1): two overlapping
     # re-bands compute the same r_<base>_<seq> target and would
     # interleave writes into it; and a re-band racing an embs
     # compaction could read batch dirs mid-delete. One lock per
     # snapshot serializes the whole maintenance surface.
-    token = _acquire_maintenance_lock(spark, snapshot_path)
-    stage = f"{snapshot_path}/_stage_{token}"
-    _sweep_foreign_stages(jvm, fs, snapshot_path, token)
-    try:
+    with _MaintenanceRun(spark, snapshot_path) as run:
+        jvm, fs = run.jvm, run.fs
         # re-list under the lock: seq must reflect any re-band that
         # committed between our first listing and the acquire, and the
         # corpus read must see a dir set no concurrent embs-compaction
         # can delete mid-scan (the compactors share this lock)
         state_dirs = _semantic_state_dirs(spark, snapshot_path)
-        emb_dirs = _list_batch_dirs(
-            spark, f"{snapshot_path}/embs", "b_", base + 1
+        corpus = spark.read.parquet(
+            *_store_dirs(spark, snapshot_path, _EMBS, base + 1)
         )
-        corpus = spark.read.parquet(*emb_dirs)
         new_state = semantic_dedup_clusters(
             corpus, centroids=centroids, bits=bits, **dedup_kwargs
         )
-        seq = max([s for b, s, _ in state_dirs if b == base] or [0]) + 1
-        rdir = f"{snapshot_path}/r_{base:020d}_{seq:04d}"
-        new_state.write.mode("overwrite").parquet(f"{stage}/state")
-        _write_bits_pin(spark, f"{stage}/bits", bits)
-        _assert_holds_maintenance_lock(spark, snapshot_path, token)
-        rpath = jvm.org.apache.hadoop.fs.Path(rdir)
-        if fs.exists(rpath):
-            fs.delete(rpath, True)  # crashed holder's uncommitted leftover
-        if not fs.rename(jvm.org.apache.hadoop.fs.Path(stage), rpath):
-            raise ConcurrentMaintenanceError(
-                f"could not install re-band dir {rdir} — lost a race"
-            )
-        _assert_holds_maintenance_lock(spark, snapshot_path, token)
-        try:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{rdir}/{ROLLUP_APPLIED_MARKER}"
-                ),
-                False,
-            ).close()
-        except Exception as exc:
-            raise ConcurrentMaintenanceError(
-                f"re-band marker for {rdir} already exists — a"
-                " concurrent maintenance run committed it first"
-            ) from exc
-        return _reband_finish(
-            spark, snapshot_path, jvm, fs, bits, state_dirs, base,
-            keep_versions,
+        new_state.write.mode("overwrite").parquet(f"{run.stage}/state")
+        _write_bits_pin(spark, f"{run.stage}/bits", bits)
+        _commit_rewrite(
+            run, snapshot_path, base, state_dirs, keep_versions, "re-band"
         )
-    finally:
-        _finish_maintenance(spark, jvm, fs, stage, snapshot_path, token)
-
-
-def _reband_finish(
-    spark, snapshot_path, jvm, fs, bits, state_dirs, base, keep_versions
-) -> int:
-    """Post-commit tail of ``reband_semantic_store``: legacy root-pin
-    refresh + superseded-state pruning (both best-effort; the re-band
-    is already committed)."""
-    try:
-        # best-effort refresh of the LEGACY root pin so pre-round-9
-        # tooling and external readers stop seeing the pre-migration
-        # width (advisor finding, round 10). Authority is unaffected:
-        # folds resolve width from the committed state dir first, so a
-        # crash here leaves the migration complete and the root pin
-        # merely stale — exactly the pre-fix state.
-        if fs.exists(
-            jvm.org.apache.hadoop.fs.Path(
-                f"{snapshot_path}/lsh_bits{ROLLUP_APPLIED_MARKER}"
-            )
-        ):
-            _write_bits_pin(spark, f"{snapshot_path}/lsh_bits", bits)
-    except Exception:
-        pass  # best-effort; the in-dir pin remains authoritative
-    for b, s, old in state_dirs[
-        : max(0, len(state_dirs) + 1 - keep_versions)
-    ]:
-        if b == base and s == 0:
-            # v_<base> carries the version marker the fold's replay
-            # check and the embs/compaction bounds key off — a re-band
-            # supersedes its STATE, never its version id
-            continue
-        fs.delete(jvm.org.apache.hadoop.fs.Path(old), True)
-    return bits
+        try:
+            # best-effort refresh of the LEGACY root pin so pre-round-9
+            # tooling and external readers stop seeing the pre-migration
+            # width (advisor finding, round 10). Authority is unaffected:
+            # folds resolve width from the committed state dir first, so a
+            # crash here leaves the migration complete and the root pin
+            # merely stale — exactly the pre-fix state.
+            if fs.exists(
+                jvm.org.apache.hadoop.fs.Path(
+                    f"{snapshot_path}/lsh_bits{ROLLUP_APPLIED_MARKER}"
+                )
+            ):
+                _write_bits_pin(spark, f"{snapshot_path}/lsh_bits", bits)
+        except Exception:
+            pass  # best-effort; the in-dir pin remains authoritative
+        return bits
 
 
 def streaming_semantic_maintenance(
@@ -2357,24 +2355,7 @@ def streaming_semantic_maintenance(
             **dedup_kwargs,
         )
 
-    return (
-        emb_stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _passage_index_dir(snapshot_path: str, batch_id: int) -> str:
-    return f"{snapshot_path}/windows/w_{batch_id:020d}"
-
-
-def _passage_index_dirs(spark, snapshot_path: str, before_batch_id: int) -> list[str]:
-    """Window-index dirs with batch id < ``before_batch_id`` (see
-    ``_list_batch_dirs`` for the append-only listing contract)."""
-    return _list_batch_dirs(
-        spark, f"{snapshot_path}/windows", "w_", before_batch_id
-    )
+    return _start_fold_stream(emb_stream, fold_batch, checkpoint_path)
 
 
 def fold_passage_batch(
@@ -2398,13 +2379,11 @@ def fold_passage_batch(
 
     spark = batch_df.sparkSession
     jvm, fs = _rollup_fs(spark, snapshot_path)
-    cuts_dir = f"{snapshot_path}/cuts/c_{batch_id:020d}"
-    marker = jvm.org.apache.hadoop.fs.Path(
-        f"{cuts_dir}/{ROLLUP_APPLIED_MARKER}"
-    )
-    if fs.exists(marker):
+    cuts_dir = _CUTS.batch_dir(snapshot_path, batch_id)
+    marker = f"{cuts_dir}/{ROLLUP_APPLIED_MARKER}"
+    if fs.exists(jvm.org.apache.hadoop.fs.Path(marker)):
         return  # replayed batch: already folded and committed
-    idx_dirs = _passage_index_dirs(spark, snapshot_path, batch_id)
+    idx_dirs = _store_dirs(spark, snapshot_path, _WINDOWS, batch_id)
     if idx_dirs:
         idx = spark.read.parquet(*idx_dirs)
         cuts = incremental_passage_cuts(batch_df, idx)
@@ -2412,17 +2391,15 @@ def fold_passage_batch(
         cuts = passage_cut_spans(batch_df)
     cuts.write.mode("overwrite").parquet(cuts_dir)
     passage_windows(batch_df).write.mode("overwrite").parquet(
-        _passage_index_dir(snapshot_path, batch_id)
+        _WINDOWS.batch_dir(snapshot_path, batch_id)
     )
-    fs.create(marker, True).close()
+    _create_marker(jvm, fs, marker)
 
 
 def read_passage_cuts(spark, snapshot_path: str) -> DataFrame:
     """All COMMITTED cut lists (doc_id, span_start, span_end) across
     batches — apply with ``passages.apply_passage_cuts``."""
-    dirs = _list_batch_dirs(
-        spark, f"{snapshot_path}/cuts", "c_", marker_required=True
-    )
+    dirs = _store_dirs(spark, snapshot_path, _CUTS, marker_required=True)
     if not dirs:
         raise FileNotFoundError(f"no committed cuts under {snapshot_path}")
     return spark.read.parquet(*dirs)
@@ -2446,16 +2423,7 @@ def streaming_passage_maintenance(
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_passage_batch(batch_df, batch_id, snapshot_path)
 
-    return (
-        docs_stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _pack_batch_dir(snapshot_path: str, batch_id: int) -> str:
-    return f"{snapshot_path}/packs/p_{batch_id:020d}"
+    return _start_fold_stream(docs_stream, fold_batch, checkpoint_path)
 
 
 def fold_pack_batch(
@@ -2492,18 +2460,12 @@ def fold_pack_batch(
     budget = PACK_BUDGET if budget is None else budget
     spark = batch_df.sparkSession
     jvm, fs = _rollup_fs(spark, snapshot_path)
-    base = _pack_batch_dir(snapshot_path, batch_id)
-    marker = jvm.org.apache.hadoop.fs.Path(
-        f"{base}/{ROLLUP_APPLIED_MARKER}"
-    )
-    if fs.exists(marker):
+    base = _PACKS.batch_dir(snapshot_path, batch_id)
+    marker = f"{base}/{ROLLUP_APPLIED_MARKER}"
+    if fs.exists(jvm.org.apache.hadoop.fs.Path(marker)):
         return  # replayed batch: already folded and committed
-    committed = _list_batch_dirs(
-        spark,
-        f"{snapshot_path}/packs",
-        "p_",
-        before_batch_id=batch_id,
-        marker_required=True,
+    committed = _store_dirs(
+        spark, snapshot_path, _PACKS, batch_id, marker_required=True
     )
     prev_end = (
         spark.read.parquet(f"{committed[-1]}/meta").collect()[0]["tape_end"]
@@ -2549,21 +2511,19 @@ def fold_pack_batch(
         )
     )
     new_end.write.mode("overwrite").parquet(f"{base}/meta")
-    fs.create(marker, True).close()
+    _create_marker(jvm, fs, marker)
 
 
 def read_packed_corpus(spark, snapshot_path: str) -> DataFrame:
     """(doc_id, n_tokens, start_off, pack_id, end_pack) across all
     COMMITTED ingest batches — the same schema ``pack_sequences``
     produces, consumable by the shard writer's grouping rule."""
-    dirs = _list_batch_dirs(
-        spark, f"{snapshot_path}/packs", "p_", marker_required=True
-    )
+    dirs = _store_dirs(spark, snapshot_path, _PACKS, marker_required=True)
     if not dirs:
         raise FileNotFoundError(
             f"no committed packed batches under {snapshot_path}"
         )
-    return spark.read.parquet(*[f"{d}/rows" for d in dirs])
+    return spark.read.parquet(*_PACKS.data_paths(dirs))
 
 
 def streaming_pack_maintenance(
@@ -2593,12 +2553,7 @@ def streaming_pack_maintenance(
             bpe_merges=bpe_merges,
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold_stream(docs_stream, fold_batch, checkpoint_path)
 
 
 #: compacted-generation batch ids live far above any Structured
@@ -2677,16 +2632,12 @@ def fold_ann_index_batch(
     k_cells = IVF_CELLS if k_cells is None else k_cells
     spark = batch_df.sparkSession
     jvm, fs = _rollup_fs(spark, snapshot_path)
-    marker = jvm.org.apache.hadoop.fs.Path(
-        f"{snapshot_path}/markers/b_{batch_id:020d}{ROLLUP_APPLIED_MARKER}"
-    )
-    if fs.exists(marker):
+    marker = _ann_marker(snapshot_path, f"b_{batch_id:020d}")
+    if fs.exists(jvm.org.apache.hadoop.fs.Path(marker)):
         return  # replayed batch: already folded and committed
     cb_path = f"{snapshot_path}/codebook"
-    cb_marker = jvm.org.apache.hadoop.fs.Path(
-        f"{snapshot_path}/markers/codebook{ROLLUP_APPLIED_MARKER}"
-    )
-    if not fs.exists(cb_marker):
+    cb_marker = _ann_marker(snapshot_path, "codebook")
+    if not fs.exists(jvm.org.apache.hadoop.fs.Path(cb_marker)):
         if centroids is not None:
             rows = sorted(
                 (int(r["cid"]), tuple(float(x) for x in r["centroid"]))
@@ -2713,36 +2664,24 @@ def fold_ann_index_batch(
                     " codebook) when the stream cannot guarantee that"
                 )
         save_codebook(spark, rows, cb_path)
-        fs.create(cb_marker, True).close()
+        _create_marker(jvm, fs, cb_marker)
     cents = load_codebook(spark, cb_path)
-    obs = None
+    fold_src, obs, batch_max_abs = batch_df, None, None
     if quantize:
-        sc_marker = jvm.org.apache.hadoop.fs.Path(
-            f"{snapshot_path}/markers/scale{ROLLUP_APPLIED_MARKER}"
-        )
-        sc_path = f"{snapshot_path}/scale"
-        batch_max_abs = None
-        if not fs.exists(sc_marker):
+        sc_marker = _ann_marker(snapshot_path, "scale")
+        if not fs.exists(jvm.org.apache.hadoop.fs.Path(sc_marker)):
             if scale is None:
                 # first fold, derived scale: the grid is needed BEFORE
                 # quantizing, so this one fold pays a separate agg
-                row = batch_df.agg(
-                    F.max(F.expr(_MAX_ABS_EXPR)).alias("__s")
-                ).collect()[0]
-                batch_max_abs = (
-                    float(row["__s"]) if row["__s"] is not None else 0.0
-                )
-                scale = batch_max_abs
+                batch_max_abs = scale = _max_abs(batch_df)
             if scale <= 0.0:
                 raise ValueError(
                     f"fold_ann_index_batch: pinned int8 scale {scale}"
                     " is degenerate (all-zero or empty first batch) —"
                     " supply scale= from corpus statistics"
                 )
-            spark.createDataFrame(
-                [(float(scale),)], "scale double"
-            ).coalesce(1).write.mode("overwrite").parquet(sc_path)
-            fs.create(sc_marker, True).close()
+            _write_scale_pin(spark, f"{snapshot_path}/scale", scale)
+            _create_marker(jvm, fs, sc_marker)
         # resolve through the generation-pinned record chain (round
         # 10): after a rebuild_ann_index the authoritative scale
         # travels with the committed rebuild generation, and folds
@@ -2751,27 +2690,10 @@ def fold_ann_index_batch(
         if batch_max_abs is None:
             # drift ledger without a second scan: observe the batch's
             # max-abs inside the SAME job that writes the vectors
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            fold_src = batch_df.observe(
-                obs, F.max(F.expr(_MAX_ABS_EXPR)).alias("max_abs")
-            )
-        else:
-            fold_src = batch_df
-    else:
-        fold_src = batch_df
+            fold_src, obs = _observe_max_abs(batch_df)
     assigned = ivf_assign_with_payload(fold_src, k_cells, centroids=cents)
     if quantize:
-        assigned = assigned.select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, x -> CAST(least(greatest("
-                f"floor(CAST(x AS DOUBLE) / {s!r} * 127 + 0.5),"
-                " -127), 127) AS TINYINT))"
-            ).alias("qemb"),
-            "cell",
-        )
+        assigned = assigned.select("vec_id", _int8_qemb(s), "cell")
     (
         assigned
         .withColumn("batch", F.lit(batch_id))
@@ -2783,28 +2705,75 @@ def fold_ann_index_batch(
     )
     if quantize:
         if obs is not None:
-            try:
-                got = obs.get.get("max_abs")
-            except Exception:
-                # an EMPTY micro-batch's observe node never fires and
-                # Observation.get asserts (found by the round-10
-                # empty-batch test); the ledger must stay honest, so
-                # fall back to an explicit scan of the (unobserved)
-                # batch — zero rows, zero cost, max() → null → 0.0
-                got = batch_df.agg(
-                    F.max(F.expr(_MAX_ABS_EXPR)).alias("__s")
-                ).collect()[0]["__s"]
-            batch_max_abs = float(got) if got is not None else 0.0
+            batch_max_abs = _observed_max_abs(obs, batch_df)
         # recorded BEFORE the batch marker so every committed batch
         # carries its stat (replays overwrite their own row); the
         # audit filters to committed batches, so a crash here leaves
         # no phantom
-        spark.createDataFrame(
-            [(int(batch_id), batch_max_abs)], "batch long, max_abs double"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{snapshot_path}/scale_stats/b_{batch_id:020d}"
-        )
-    fs.create(marker, True).close()
+        _write_scale_stat(spark, snapshot_path, batch_id, batch_max_abs)
+    _create_marker(jvm, fs, marker)
+
+
+def _ann_marker(snapshot_path: str, name: str) -> str:
+    """The ANN index's central marker for ``name`` (``b_<020d id>``,
+    ``codebook`` or ``scale``)."""
+    return f"{snapshot_path}/markers/{name}{ROLLUP_APPLIED_MARKER}"
+
+
+def _max_abs(df: DataFrame) -> float:
+    """Corpus max-abs embedding component of ``df`` (0.0 when empty)."""
+    got = df.agg(F.max(F.expr(_MAX_ABS_EXPR)).alias("__s")).collect()[0][
+        "__s"
+    ]
+    return float(got) if got is not None else 0.0
+
+
+def _observe_max_abs(df: DataFrame):
+    """``(df observing its max-abs, observation)``: the stat is measured
+    inside whatever job consumes ``df`` — no second scan."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    return df.observe(obs, F.max(F.expr(_MAX_ABS_EXPR)).alias("max_abs")), obs
+
+
+def _observed_max_abs(obs, df: DataFrame) -> float:
+    """The max-abs ``_observe_max_abs`` measured for ``df``."""
+    try:
+        got = obs.get.get("max_abs")
+    except Exception:
+        # an EMPTY input's observe node never fires and Observation.get
+        # asserts (found by the round-10 empty-batch test); the ledger
+        # must stay honest, so fall back to an explicit scan of the
+        # unobserved input — zero rows, zero cost, max() → null → 0.0
+        return _max_abs(df)
+    return float(got) if got is not None else 0.0
+
+
+def _int8_qemb(scale: float):
+    """``embedding`` quantized onto the int8 grid of ``scale``, as
+    ``qemb`` (components beyond the grid clamp at ±127)."""
+    return F.expr(
+        "transform(embedding, x -> CAST(least(greatest("
+        f"floor(CAST(x AS DOUBLE) / {scale!r} * 127 + 0.5),"
+        " -127), 127) AS TINYINT))"
+    ).alias("qemb")
+
+
+def _write_scale_pin(spark, path: str, scale: float) -> None:
+    spark.createDataFrame([(float(scale),)], "scale double").coalesce(
+        1
+    ).write.mode("overwrite").parquet(path)
+
+
+def _write_scale_stat(
+    spark, snapshot_path: str, batch_id: int, max_abs: float
+) -> None:
+    spark.createDataFrame(
+        [(int(batch_id), float(max_abs))], "batch long, max_abs double"
+    ).coalesce(1).write.mode("overwrite").parquet(
+        f"{snapshot_path}/scale_stats/b_{batch_id:020d}"
+    )
 
 
 def _ann_marker_state(
@@ -2820,26 +2789,14 @@ def _ann_marker_state(
     ledger before the old ledger rotates away (round 9, the same
     rotation hole fixed for the flat stores)."""
     jvm, fs = _rollup_fs(spark, snapshot_path)
-    root = jvm.org.apache.hadoop.fs.Path(f"{snapshot_path}/markers")
-    if not fs.exists(root):
-        return [], []
-    committed = []
-    for st_ in fs.listStatus(root):
-        name = st_.getPath().getName()
-        if name.startswith("b_") and name.endswith(ROLLUP_APPLIED_MARKER):
-            committed.append(int(name[2 : -len(ROLLUP_APPLIED_MARKER)]))
+    committed = _marker_ids(jvm, fs, snapshot_path, "b_")
     excluded: set[int] = set()
     for gen in committed:
         if gen >= ANN_COMPACT_BASE:
-            excluded.update(
-                int(r["src"])
-                for r in spark.read.parquet(
-                    f"{snapshot_path}/compact_sources/g_{gen:020d}"
-                ).collect()
-            )
+            excluded.update(_gen_sources(spark, snapshot_path, gen))
     return (
-        sorted(b for b in committed if b not in excluded),
-        sorted(b for b in committed if b in excluded),
+        [b for b in committed if b not in excluded],
+        [b for b in committed if b in excluded],
     )
 
 
@@ -2870,20 +2827,10 @@ def _ann_pinned_scale(
     jvm, fs = _rollup_fs(spark, snapshot_path)
     if live is None:
         live = _ann_committed_batches(spark, snapshot_path)
-    sg_root = jvm.org.apache.hadoop.fs.Path(f"{snapshot_path}/scale_gens")
-    if fs.exists(sg_root):
-        recs = set()
-        for st_ in fs.listStatus(sg_root):
-            name = st_.getPath().getName()
-            if name.startswith("b_"):
-                recs.add(int(name[2:]))
-        for b in sorted(live, reverse=True):
-            if b in recs:
-                return float(
-                    spark.read.parquet(
-                        f"{snapshot_path}/scale_gens/b_{b:020d}"
-                    ).collect()[0]["scale"]
-                )
+    recs = dict(_batch_dirs(jvm, fs, f"{snapshot_path}/scale_gens", "b_"))
+    for b in sorted(live, reverse=True):
+        if b in recs:
+            return float(spark.read.parquet(recs[b]).collect()[0]["scale"])
     return float(
         spark.read.parquet(f"{snapshot_path}/scale").collect()[0]["scale"]
     )
@@ -2904,202 +2851,164 @@ def compact_ann_index(
     race that) into ONE compacted generation whose per-cell file count
     comes from the sources' actual on-disk bytes (``target_file_mb``,
     the ``io.compact_parquet`` sizing rule), partitioned by the same
-    ``batch=<gen>/cell=K/`` layout, then flips visibility atomically
-    via the shared marker contract:
-
-    1. write the merged vectors under ``batch=<gen>`` (gen ids live at
-       ``ANN_COMPACT_BASE`` + generation counter — disjoint from
-       stream batch ids by construction);
-    2. write the generation's source-batch list
-       (``compact_sources/g_<gen>``);
-    3. create the ``b_<gen>`` marker — the atomic flip: readers now
-       include the generation and exclude its sources;
-    4. best-effort cleanup of the source markers and directories
-       (idempotent; a crash here leaves garbage that stays invisible
-       forever, never duplicates).
+    ``batch=<gen>/cell=K/`` layout. Generation ids live at
+    ``ANN_COMPACT_BASE`` + a counter, disjoint from stream batch ids,
+    and commit through the central ``markers/b_<gen>_APPLIED`` under
+    contract items 2 and 3 of the module docstring: the ledger lists
+    the generation's source batches, and the marker create is the
+    atomic flip that includes the generation and excludes its sources.
 
     Replay-idempotent: re-running after any crash recomputes the same
     ``gen`` (no committed marker yet → same max+1), overwrites the
     same staging output, and re-flips; re-running after a COMMITTED
     compaction folds the previous generation into the next one (or
     no-ops when fewer than two safe sources exist). Serving parity
-    before/after is pinned in tests. Compactor-vs-compactor exclusion
-    is enforced by the snapshot's maintenance lock (round 10, r9
-    verdict item 1): a concurrent invocation raises
-    ``ConcurrentMaintenanceError`` with the store untouched, and the
-    merged vectors stage in a token-unique directory before an install
-    rename, so even a lease-expired zombie writer cannot mix part
-    files into the committed generation. Returns the new generation
-    id, or None when there was nothing to compact."""
-    import math
-
-    jvm, fs = _rollup_fs(spark, snapshot_path)
-    token = _acquire_maintenance_lock(spark, snapshot_path)
-    stage = f"{snapshot_path}/_stage_{token}"
-    _sweep_foreign_stages(jvm, fs, snapshot_path, token)
-    try:
-        return _compact_ann_index_locked(
-            spark, snapshot_path, target_file_mb, jvm, fs, token, stage
+    before/after is pinned in tests. Returns the new generation id, or
+    None when there was nothing to compact."""
+    with _MaintenanceRun(spark, snapshot_path) as run:
+        jvm, fs = run.jvm, run.fs
+        committed, leftovers = _ann_marker_state(spark, snapshot_path)
+        stream_batches = [b for b in committed if b < ANN_COMPACT_BASE]
+        gens = [b for b in committed if b >= ANN_COMPACT_BASE]
+        # the newest stream batch may still be replayed by a recovering
+        # stream (its foreachBatch re-runs until the checkpoint commits);
+        # all older batches are checkpoint-final and safe to fold
+        sources = sorted(stream_batches[:-1] + gens)
+        if len(sources) < 2:
+            return None
+        gen = (max(gens) + 1) if gens else ANN_COMPACT_BASE
+        vec_root = f"{snapshot_path}/vectors"
+        # the dir-less sources (empty micro-batches) still enter the
+        # LEDGER below — that is what retires their markers
+        src_dirs = _ann_partitions(jvm, fs, vec_root, sources)
+        if not src_dirs:
+            return None  # every source batch was empty — nothing to merge
+        merged = (
+            spark.read.option("basePath", vec_root)
+            .parquet(*src_dirs)
+            .drop("batch")
+            .withColumn("batch", F.lit(gen))
         )
-    finally:
-        _finish_maintenance(spark, jvm, fs, stage, snapshot_path, token)
+        _write_ann_generation(
+            jvm,
+            fs,
+            merged,
+            src_dirs,
+            spark.read.parquet(f"{snapshot_path}/codebook").count(),
+            target_file_mb,
+            run.stage,
+        )
+        run.install(
+            f"{run.stage}/batch={gen}",
+            f"{vec_root}/batch={gen}",
+            "generation partition",
+        )
+        # fold the quantizer-drift ledger alongside (round 9): one
+        # scale_stats/b_<id> dir per fold grows files linear in fold count
+        # — the exact growth this compactor exists to bound — so the
+        # sources' stats rows (original batch ids preserved; the headroom
+        # audit keys on ids from compact_sources, not on dir names) are
+        # rewritten into one b_<gen> dir and the folded dirs deleted in
+        # step 4. The audit dedupes by batch, so the crash window between
+        # this rewrite and the cleanup is exact, not just harmless.
+        stats_src = [
+            f"{snapshot_path}/scale_stats/b_{b:020d}"
+            for b in sources
+            if fs.exists(
+                jvm.org.apache.hadoop.fs.Path(
+                    f"{snapshot_path}/scale_stats/b_{b:020d}"
+                )
+            )
+        ]
+        if stats_src:
+            spark.read.parquet(*stats_src).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(f"{snapshot_path}/scale_stats/b_{gen:020d}")
+        # carry the generation-pinned scale with the fold (round 10): on a
+        # quantized store, resolution follows the NEWEST live record
+        # (``_ann_pinned_scale``), and this compaction is about to fold
+        # away the sources that may carry it — re-pin the resolved scale
+        # on the new generation so a post-rebuild store keeps serving and
+        # folding at the rebuilt grid across arbitrarily many compactions
+        if fs.exists(
+            jvm.org.apache.hadoop.fs.Path(_ann_marker(snapshot_path, "scale"))
+        ):
+            _write_scale_pin(
+                spark,
+                f"{snapshot_path}/scale_gens/b_{gen:020d}",
+                _ann_pinned_scale(spark, snapshot_path),
+            )
+        # the ledger = data sources PLUS the leftovers whose markers a
+        # crashed cleanup never deleted (their vectors live inside a
+        # prior generation being folded forward, so they are excluded,
+        # never re-read — re-reading would duplicate them into this
+        # generation; the prior generation's ledger is about to rotate
+        # away, so without the carry the surviving marker would make
+        # them live again — round-9 review finding, ANN twin of the
+        # flat-store fix)
+        _write_ledger(spark, snapshot_path, gen, sources + leftovers)
+        run.assert_held()
+        _create_marker(
+            jvm, fs, _ann_marker(snapshot_path, f"b_{gen:020d}"), cas=True
+        )
+        # cleanup — everything below is already invisible to readers;
+        # leftovers from PRIOR crashed cleanups are retried here too
+        _cleanup_ann_sources(
+            spark,
+            snapshot_path,
+            sources + leftovers,
+            live_stream_max=(stream_batches[-1] if stream_batches else None),
+        )
+        return gen
 
 
-def _compact_ann_index_locked(
-    spark, snapshot_path, target_file_mb, jvm, fs, token, stage
-) -> int | None:
-    """Body of ``compact_ann_index``, run under the maintenance lock
-    (round 10, r9 verdict item 1 — see ``_acquire_maintenance_lock``
-    for the exclusion contract this relies on)."""
-    import math
-
-    committed, leftovers = _ann_marker_state(spark, snapshot_path)
-    stream_batches = [b for b in committed if b < ANN_COMPACT_BASE]
-    gens = [b for b in committed if b >= ANN_COMPACT_BASE]
-    # the newest stream batch may still be replayed by a recovering
-    # stream (its foreachBatch re-runs until the checkpoint commits);
-    # all older batches are checkpoint-final and safe to fold
-    sources = sorted(stream_batches[:-1] + gens)
-    if len(sources) < 2:
-        return None
-    gen = (max(gens) + 1) if gens else ANN_COMPACT_BASE
-    vec_root = f"{snapshot_path}/vectors"
-    # a committed marker does NOT guarantee a partition dir: an empty
-    # micro-batch's dynamic-partition write emits no batch=<id> dir
-    # yet still commits its marker (review finding, round 10). The
-    # dir-less sources still enter the LEDGER below — that is what
-    # retires their markers — but only the dirs that exist feed the
-    # byte sizing and the merge read (a missing path would fail both).
-    src_dirs = [
+def _ann_partitions(jvm, fs, vec_root: str, batch_ids: list[int]) -> list[str]:
+    """The ``batch=<id>`` partition dirs that exist for ``batch_ids``. A
+    committed marker does NOT guarantee one: an empty micro-batch's
+    dynamic-partition write emits no dir yet still commits (review
+    finding, round 10), and a missing path would fail both the byte
+    sizing and the merge read."""
+    return [
         d
-        for b in sources
+        for b in batch_ids
         for d in (f"{vec_root}/batch={b}",)
         if fs.exists(jvm.org.apache.hadoop.fs.Path(d))
     ]
-    if not src_dirs:
-        return None  # every source batch was empty — nothing to merge
-    total_bytes = 0
-    for d in src_dirs:
-        total_bytes += fs.getContentSummary(
-            jvm.org.apache.hadoop.fs.Path(d)
-        ).getLength()
-    n_cells = spark.read.parquet(f"{snapshot_path}/codebook").count()
+
+
+def _write_ann_generation(
+    jvm,
+    fs,
+    vectors: DataFrame,
+    src_dirs: list[str],
+    n_cells: int,
+    target_file_mb: int,
+    stage: str,
+) -> None:
+    """Write one ANN generation (compaction or rebuild) into ``stage``
+    as ``batch=<gen>/cell=K/``: the per-cell file count comes from the
+    source partitions' on-disk bytes, and an oversized cell splits on a
+    stable vector-id salt so the per-cell file size honors the target
+    even under cell skew."""
+    import math
+
     files_per_cell = max(
         1,
-        math.ceil(total_bytes / max(1, n_cells) / (target_file_mb * 2**20)),
-    )
-    merged = (
-        spark.read.option("basePath", vec_root)
-        .parquet(*src_dirs)
-        .drop("batch")
-        .withColumn("batch", F.lit(gen))
+        math.ceil(
+            _dir_bytes(jvm, fs, src_dirs)
+            / max(1, n_cells)
+            / (target_file_mb * 2**20)
+        ),
     )
     if files_per_cell > 1:
-        # oversized cells split on a stable vector-id salt so the
-        # per-cell file size honors the target even under cell skew
-        merged = merged.repartition(
-            files_per_cell * max(1, n_cells),
+        vectors = vectors.repartition(
+            files_per_cell * max(1, int(n_cells)),
             "cell",
             F.pmod(F.xxhash64("vec_id"), F.lit(files_per_cell)),
         )
     else:
-        merged = merged.repartition("cell")
-    # token-unique staging + install rename of batch=<gen> into the
-    # live vectors root: a zombie writer that lost the lease can never
-    # mix its part files into the new holder's generation (round 10)
-    (
-        merged.write.mode("overwrite")
-        .partitionBy("batch", "cell")
-        .parquet(stage)
-    )
-    _assert_holds_maintenance_lock(spark, snapshot_path, token)
-    dest = jvm.org.apache.hadoop.fs.Path(f"{vec_root}/batch={gen}")
-    if fs.exists(dest):
-        fs.delete(dest, True)  # crashed holder's uncommitted leftover
-    if not fs.rename(
-        jvm.org.apache.hadoop.fs.Path(f"{stage}/batch={gen}"), dest
-    ):
-        raise ConcurrentMaintenanceError(
-            f"could not install generation partition {dest} — lost a race"
-        )
-    # fold the quantizer-drift ledger alongside (round 9): one
-    # scale_stats/b_<id> dir per fold grows files linear in fold count
-    # — the exact growth this compactor exists to bound — so the
-    # sources' stats rows (original batch ids preserved; the headroom
-    # audit keys on ids from compact_sources, not on dir names) are
-    # rewritten into one b_<gen> dir and the folded dirs deleted in
-    # step 4. The audit dedupes by batch, so the crash window between
-    # this rewrite and the cleanup is exact, not just harmless.
-    stats_src = [
-        f"{snapshot_path}/scale_stats/b_{b:020d}"
-        for b in sources
-        if fs.exists(
-            jvm.org.apache.hadoop.fs.Path(
-                f"{snapshot_path}/scale_stats/b_{b:020d}"
-            )
-        )
-    ]
-    if stats_src:
-        spark.read.parquet(*stats_src).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{snapshot_path}/scale_stats/b_{gen:020d}")
-    # carry the generation-pinned scale with the fold (round 10): on a
-    # quantized store, resolution follows the NEWEST live record
-    # (``_ann_pinned_scale``), and this compaction is about to fold
-    # away the sources that may carry it — re-pin the resolved scale
-    # on the new generation so a post-rebuild store keeps serving and
-    # folding at the rebuilt grid across arbitrarily many compactions
-    if fs.exists(
-        jvm.org.apache.hadoop.fs.Path(
-            f"{snapshot_path}/markers/scale{ROLLUP_APPLIED_MARKER}"
-        )
-    ):
-        spark.createDataFrame(
-            [(float(_ann_pinned_scale(spark, snapshot_path)),)],
-            "scale double",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{snapshot_path}/scale_gens/b_{gen:020d}"
-        )
-    # the ledger = data sources PLUS the leftovers whose markers a
-    # crashed cleanup never deleted (their vectors live inside a
-    # prior generation being folded forward, so they are excluded,
-    # never re-read — re-reading would duplicate them into this
-    # generation; the prior generation's ledger is about to rotate
-    # away, so without the carry the surviving marker would make
-    # them live again — round-9 review finding, ANN twin of the
-    # flat-store fix)
-    spark.createDataFrame(
-        [(int(b),) for b in sources + leftovers], "src long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{snapshot_path}/compact_sources/g_{gen:020d}"
-    )
-    _assert_holds_maintenance_lock(spark, snapshot_path, token)
-    # overwrite=False: the visibility flip is a CAS (round 10) — a
-    # second writer that somehow reached here fails loudly instead of
-    # double-committing the generation
-    try:
-        fs.create(
-            jvm.org.apache.hadoop.fs.Path(
-                f"{snapshot_path}/markers/"
-                f"b_{gen:020d}{ROLLUP_APPLIED_MARKER}"
-            ),
-            False,
-        ).close()
-    except Exception as exc:
-        raise ConcurrentMaintenanceError(
-            f"generation marker b_{gen} already exists under"
-            f" {snapshot_path} — a concurrent maintenance run"
-            " committed it first"
-        ) from exc
-    # 4. cleanup — everything below is already invisible to readers;
-    # leftovers from PRIOR crashed cleanups are retried here too
-    _cleanup_ann_sources(
-        spark,
-        snapshot_path,
-        sources + leftovers,
-        live_stream_max=(stream_batches[-1] if stream_batches else None),
-    )
-    return gen
+        vectors = vectors.repartition("cell")
+    vectors.write.mode("overwrite").partitionBy("batch", "cell").parquet(stage)
 
 
 def _cleanup_ann_sources(
@@ -3132,8 +3041,7 @@ def _cleanup_ann_sources(
             if b != fence:
                 fs.delete(
                     jvm.org.apache.hadoop.fs.Path(
-                        f"{snapshot_path}/markers/"
-                        f"b_{b:020d}{ROLLUP_APPLIED_MARKER}"
+                        _ann_marker(snapshot_path, f"b_{b:020d}")
                     ),
                     False,
                 )
@@ -3233,17 +3141,9 @@ def ann_scale_headroom(spark, snapshot_path: str) -> DataFrame:
     # folded history survives arbitrarily many compactions. A phantom
     # batch can appear in neither (its marker never existed and
     # compaction only folds marker-committed batches).
-    marker_ids = set()
-    mroot = jvm.org.apache.hadoop.fs.Path(f"{snapshot_path}/markers")
-    if fs.exists(mroot):
-        for st_ in fs.listStatus(mroot):
-            name = st_.getPath().getName()
-            if name.startswith("b_") and name.endswith(
-                ROLLUP_APPLIED_MARKER
-            ):
-                marker_ids.add(int(name[2 : -len(ROLLUP_APPLIED_MARKER)]))
     committed_df = spark.createDataFrame(
-        [(int(b),) for b in sorted(marker_ids)], "batch long"
+        [(b,) for b in _marker_ids(jvm, fs, snapshot_path, "b_")],
+        "batch long",
     )
     cs_root = jvm.org.apache.hadoop.fs.Path(f"{snapshot_path}/compact_sources")
     if fs.exists(cs_root):
@@ -3384,25 +3284,18 @@ def rebuild_ann_index(
     maintenance lock (concurrent maintenance raises
     ``ConcurrentMaintenanceError`` with the store untouched). Returns
     the new pinned scale."""
-    import math
-
     from ..operators.similarity import ivf_assign_with_payload, load_codebook
 
     jvm, fs = _rollup_fs(spark, snapshot_path)
     if not fs.exists(
-        jvm.org.apache.hadoop.fs.Path(
-            f"{snapshot_path}/markers/scale{ROLLUP_APPLIED_MARKER}"
-        )
+        jvm.org.apache.hadoop.fs.Path(_ann_marker(snapshot_path, "scale"))
     ):
         raise ValueError(
             f"rebuild_ann_index: {snapshot_path} is not a quantized"
             " snapshot (no pinned scale) — a float store has no grid"
             " to drift; nothing to rebuild"
         )
-    token = _acquire_maintenance_lock(spark, snapshot_path)
-    stage = f"{snapshot_path}/_stage_{token}"
-    _sweep_foreign_stages(jvm, fs, snapshot_path, token)
-    try:
+    with _MaintenanceRun(spark, snapshot_path) as run:
         live, leftovers = _ann_marker_state(spark, snapshot_path)
         if not live:
             raise FileNotFoundError(
@@ -3434,11 +3327,7 @@ def rebuild_ann_index(
             # the grid is needed BEFORE quantizing, so the derived-
             # scale path pays a separate max-abs pass (ids+embedding
             # only), exactly like the fold's first-batch path
-            row = source.agg(
-                F.max(F.expr(_MAX_ABS_EXPR)).alias("__s")
-            ).collect()[0]
-            corpus_max = float(row["__s"]) if row["__s"] is not None else 0.0
-            scale = corpus_max
+            corpus_max = scale = _max_abs(source)
         scale = float(scale)
         if scale <= 0.0:
             raise ValueError(
@@ -3446,101 +3335,44 @@ def rebuild_ann_index(
                 " (empty or all-zero source) — supply scale= from"
                 " corpus statistics"
             )
-        src = source
-        obs = None
+        src, obs = source, None
         if corpus_max is None:
             # explicit scale: observe the corpus max-abs inside the
             # SAME job that writes the vectors (no second scan) — the
             # restarted drift ledger must record the truth, not the
             # caller's claim
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            src = source.observe(
-                obs, F.max(F.expr(_MAX_ABS_EXPR)).alias("max_abs")
-            )
+            src, obs = _observe_max_abs(source)
         cents = load_codebook(spark, f"{snapshot_path}/codebook")
         n_cells = cents.count()
-        assigned = ivf_assign_with_payload(
-            src, int(n_cells), centroids=cents
+        quantized = (
+            ivf_assign_with_payload(src, int(n_cells), centroids=cents)
+            .select("vec_id", _int8_qemb(scale), "cell")
+            .withColumn("batch", F.lit(gen))
         )
-        quantized = assigned.select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, x -> CAST(least(greatest("
-                f"floor(CAST(x AS DOUBLE) / {scale!r} * 127 + 0.5),"
-                " -127), 127) AS TINYINT))"
-            ).alias("qemb"),
-            "cell",
-        ).withColumn("batch", F.lit(gen))
-        total_bytes = 0
-        for b in live:
-            # a committed marker does NOT guarantee a partition dir:
-            # an empty micro-batch's dynamic-partition write emits no
-            # batch=<id> dir yet still commits (review finding, round
-            # 10 — an unguarded getContentSummary made the drift cure
-            # unrunnable on any store with one empty fold)
-            bp = jvm.org.apache.hadoop.fs.Path(f"{vec_root}/batch={b}")
-            if fs.exists(bp):
-                total_bytes += fs.getContentSummary(bp).getLength()
-        files_per_cell = max(
-            1,
-            math.ceil(
-                total_bytes / max(1, n_cells) / (target_file_mb * 2**20)
-            ),
-        )
-        if files_per_cell > 1:
-            quantized = quantized.repartition(
-                files_per_cell * max(1, int(n_cells)),
-                "cell",
-                F.pmod(F.xxhash64("vec_id"), F.lit(files_per_cell)),
-            )
-        else:
-            quantized = quantized.repartition("cell")
-        (
-            quantized.write.mode("overwrite")
-            .partitionBy("batch", "cell")
-            .parquet(stage)
+        _write_ann_generation(
+            jvm,
+            fs,
+            quantized,
+            _ann_partitions(jvm, fs, vec_root, live),
+            n_cells,
+            target_file_mb,
+            run.stage,
         )
         if obs is not None:
-            try:
-                got = obs.get.get("max_abs")
-            except Exception:
-                # zero-task observe never fires and Observation.get
-                # asserts (see fold_ann_index_batch) — re-derive from
-                # the source so the restarted ledger stays honest
-                got = source.agg(
-                    F.max(F.expr(_MAX_ABS_EXPR)).alias("__s")
-                ).collect()[0]["__s"]
-            corpus_max = float(got) if got is not None else 0.0
-        _assert_holds_maintenance_lock(spark, snapshot_path, token)
-        dest = jvm.org.apache.hadoop.fs.Path(f"{vec_root}/batch={gen}")
-        if fs.exists(dest):
-            fs.delete(dest, True)  # crashed holder's uncommitted leftover
-        if not fs.rename(
-            jvm.org.apache.hadoop.fs.Path(f"{stage}/batch={gen}"), dest
-        ):
-            raise ConcurrentMaintenanceError(
-                f"could not install rebuild partition {dest} — lost a race"
-            )
+            corpus_max = _observed_max_abs(obs, source)
+        run.install(
+            f"{run.stage}/batch={gen}",
+            f"{vec_root}/batch={gen}",
+            "rebuild partition",
+        )
         # drift ledger restart + generation-pinned scale, both BEFORE
         # the marker so the flip is atomic
-        spark.createDataFrame(
-            [(int(gen), float(corpus_max))], "batch long, max_abs double"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{snapshot_path}/scale_stats/b_{gen:020d}"
+        _write_scale_stat(spark, snapshot_path, gen, corpus_max)
+        _write_scale_pin(
+            spark, f"{snapshot_path}/scale_gens/b_{gen:020d}", scale
         )
-        spark.createDataFrame(
-            [(float(scale),)], "scale double"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{snapshot_path}/scale_gens/b_{gen:020d}"
-        )
-        spark.createDataFrame(
-            [(int(b),) for b in live + leftovers], "src long"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{snapshot_path}/compact_sources/g_{gen:020d}"
-        )
-        _assert_holds_maintenance_lock(spark, snapshot_path, token)
+        _write_ledger(spark, snapshot_path, gen, live + leftovers)
+        run.assert_held()
         # flip fence against a LIVE stream (review finding, round 10):
         # a fold that committed while this rebuild ran quantized its
         # vectors on the OLD grid (it resolved the pinned scale before
@@ -3567,36 +3399,19 @@ def rebuild_ann_index(
                 " stream, then re-run rebuild_ann_index; nothing was"
                 " flipped"
             )
-        try:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{snapshot_path}/markers/"
-                    f"b_{gen:020d}{ROLLUP_APPLIED_MARKER}"
-                ),
-                False,
-            ).close()
-        except Exception as exc:
-            raise ConcurrentMaintenanceError(
-                f"rebuild marker b_{gen} already exists under"
-                f" {snapshot_path} — a concurrent maintenance run"
-                " committed it first"
-            ) from exc
+        _create_marker(
+            jvm, fs, _ann_marker(snapshot_path, f"b_{gen:020d}"), cas=True
+        )
         try:
             # best-effort legacy root-pin refresh (external readers);
             # authority lives in the generation-pinned record
-            spark.createDataFrame(
-                [(float(scale),)], "scale double"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{snapshot_path}/scale"
-            )
+            _write_scale_pin(spark, f"{snapshot_path}/scale", scale)
         except Exception:
             pass
         _cleanup_ann_sources(
             spark, snapshot_path, live + leftovers, live_stream_max=None
         )
         return scale
-    finally:
-        _finish_maintenance(spark, jvm, fs, stage, snapshot_path, token)
 
 
 def streaming_ann_index_maintenance(
@@ -3627,12 +3442,7 @@ def streaming_ann_index_maintenance(
             scale=scale,
         )
 
-    return (
-        emb_stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold_stream(emb_stream, fold_batch, checkpoint_path)
 
 
 def maintenance_status(
@@ -3681,24 +3491,9 @@ def maintenance_status(
     jvm, fs = _rollup_fs(spark, snapshot_path)
     rows: list[tuple[str, str, float | None, str | None]] = []
 
-    def _dirs(path: str, prefix: str) -> list[int]:
-        root = jvm.org.apache.hadoop.fs.Path(path)
-        if not fs.exists(root):
-            return []
-        out = []
-        for st_ in fs.listStatus(root):
-            name = st_.getPath().getName()
-            if st_.isDirectory() and name.startswith(prefix):
-                try:
-                    out.append(int(name[len(prefix):]))
-                except ValueError:
-                    pass
-        return sorted(out)
-
     # --- lock ---
     lock = _maintenance_lock_path(jvm, snapshot_path)
     parks = 0
-    stages: list[str] = []
     try:
         if fs.exists(lock.getParent()):
             for st_ in fs.listStatus(lock.getParent()):
@@ -3734,28 +3529,9 @@ def maintenance_status(
     else:
         rows.append(("lock", "held", 0.0, None))
     rows.append(("lock", "reclaim_parks", float(parks), None))
-    stage_parents = [snapshot_path] + [
-        f"{snapshot_path}/{sub}"
-        for sub in ("embs", "bands", "cuts", "windows", "packs")
-    ]
-    for parent in stage_parents:
-        try:
-            root = jvm.org.apache.hadoop.fs.Path(parent)
-            if fs.exists(root):
-                for st_ in fs.listStatus(root):
-                    name = st_.getPath().getName()
-                    if st_.isDirectory() and name.startswith("_stage_"):
-                        rel = parent[len(snapshot_path):].lstrip("/")
-                        stages.append(f"{rel}/{name}".lstrip("/"))
-        except Exception:
-            pass
+    stages = _stage_dirs(jvm, fs, snapshot_path)
     rows.append(
-        (
-            "lock",
-            "stage_dirs",
-            float(len(stages)),
-            ",".join(sorted(stages)) or None,
-        )
+        ("lock", "stage_dirs", float(len(stages)), ",".join(stages) or None)
     )
 
     # --- rollup versions + semantic serving state ---
@@ -3802,17 +3578,11 @@ def maintenance_status(
             pass
 
     # --- flat batch stores ---
-    for sub, prefix in (
-        ("embs", "b_"),
-        ("bands", "b_"),
-        ("cuts", "c_"),
-        ("windows", "w_"),
-        ("packs", "p_"),
-    ):
-        parent = f"{snapshot_path}/{sub}"
+    for sub, store in _BATCH_STORES.items():
+        parent = store.parent(snapshot_path)
         if not fs.exists(jvm.org.apache.hadoop.fs.Path(parent)):
             continue
-        batch_ids = _dirs(parent, prefix)
+        batch_ids = [b for b, _ in _batch_dirs(jvm, fs, parent, store.prefix)]
         try:
             gens, live_gens, folded = _gen_ledger(spark, parent)
         except Exception as exc:
@@ -3827,7 +3597,7 @@ def maintenance_status(
                 sub,
                 "live_batch_dirs",
                 float(len(live)),
-                f"newest={prefix}{live[-1]}" if live else None,
+                f"newest={store.prefix}{live[-1]}" if live else None,
             )
         )
         if gens:
@@ -3944,8 +3714,7 @@ def _orphaned_scale_stats(
         bid = int(name[2:])
         if fs.exists(
             jvm.org.apache.hadoop.fs.Path(
-                f"{snapshot_path}/markers/b_{bid:020d}"
-                f"{ROLLUP_APPLIED_MARKER}"
+                _ann_marker(snapshot_path, f"b_{bid:020d}")
             )
         ):
             continue
@@ -4052,8 +3821,8 @@ def maintenance_check(
             )
 
     # --- flat batch stores: generation marker <-> dir <-> ledger ---
-    for sub in ("embs", "bands", "cuts", "windows", "packs"):
-        parent = f"{snapshot_path}/{sub}"
+    for sub, store in _BATCH_STORES.items():
+        parent = store.parent(snapshot_path)
         if not _exists(parent):
             continue
         errs = 0
@@ -4094,24 +3863,22 @@ def maintenance_check(
                 )
             )
             if deep:
-                prefix = {"cuts": "c_", "windows": "w_", "packs": "p_"}.get(
-                    sub, "b_"
+                # mirror the read path EXACTLY: the in-dir-marker stores
+                # (cuts/, packs/) gate their readers on the marker
+                # (read_passage_cuts / read_packed_corpus), so the deep
+                # scan must too — an uncommitted crashed-fold dir
+                # joining the union here would fail the scan
+                # (half-written parquet) or skew the duplicate count
+                # with rows no reader ever sees (advisor finding, round
+                # 11)
+                live_dirs = store.data_paths(
+                    _store_dirs(
+                        spark,
+                        snapshot_path,
+                        store,
+                        marker_required=store.proof == _PROOF_IN_DIR,
+                    )
                 )
-                # mirror the read path EXACTLY: cuts/ and packs/ gate
-                # on in-dir markers (read_passage_cuts /
-                # read_packed_corpus), so the deep scan must too — an
-                # uncommitted crashed-fold dir joining the union here
-                # would fail the scan (half-written parquet) or skew
-                # the duplicate count with rows no reader ever sees
-                # (advisor finding, round 11)
-                live_dirs = _list_batch_dirs(
-                    spark,
-                    parent,
-                    prefix,
-                    marker_required=sub in ("cuts", "packs"),
-                )
-                if sub == "packs":
-                    live_dirs = [f"{d}/rows" for d in live_dirs]
                 if live_dirs:
                     try:
                         # the session FileStatusCache can hold a stale
@@ -4149,9 +3916,7 @@ def maintenance_check(
             )
             live, leftovers = [], []
             errs += 1
-        quantized = _exists(
-            f"{snapshot_path}/markers/scale{ROLLUP_APPLIED_MARKER}"
-        )
+        quantized = _exists(_ann_marker(snapshot_path, "scale"))
         for b in live:
             have_dir = _exists(f"{snapshot_path}/vectors/batch={b}")
             if b >= ANN_COMPACT_BASE:
@@ -4243,8 +4008,8 @@ def maintenance_check(
     except Exception:
         states = []
     if states and (
-        _exists(f"{snapshot_path}/embs")
-        or _exists(f"{snapshot_path}/bands")
+        _exists(_EMBS.parent(snapshot_path))
+        or _exists(_BANDS.parent(snapshot_path))
         # a re-band rewrite implies the state-parquet layout ONLY when
         # the serving dir actually carries one — the sketch store's
         # re-width rewrites (round 12) live in the same r_ namespace
@@ -4590,15 +4355,7 @@ def clone_snapshot(
         # under the held lock — folds don't take it (advisor finding,
         # round 11: v_-only here made clones of a live re-banded
         # store fail spuriously)
-        head = rel.split("/", 1)[0]
-        if head.startswith("v_") and head[2:].isdigit():
-            return True
-        if head.startswith("r_"):
-            bits = head[2:].split("_")
-            return len(bits) == 2 and all(
-                b.isdigit() and b for b in bits
-            )
-        return False
+        return _version_key(rel.split("/", 1)[0]) is not None
 
     def _vanish_droppable(rel: str, cut: list[str]) -> str | None:
         """Second legal mid-copy vanish class: a file under a batch
@@ -4609,56 +4366,37 @@ def clone_snapshot(
         never serves an uncommitted dir, so dropping it lands exactly
         the clone a later cut would have. Returns the batch-dir rel
         to drop, or None when the vanish is real trouble (a committed
-        dir only locked-out maintenance may delete). Coverage mirrors
-        each store's OWN commit protocol — in-dir markers for
-        bands/cuts/windows/packs, central ``markers/b_*`` for the ANN
-        partitions and their scale_stats, committed serving versions
-        (``v_*``/``r_*`` with id ≥ batch) for the semantic ``embs``
-        corpus, which carries no per-batch marker of its own."""
+        dir only locked-out maintenance may delete). A flat store's
+        batch is judged by the ``_BATCH_STORES`` commit proof against
+        the cut; the ANN partitions and their scale_stats by their
+        central ``markers/b_*``."""
         parts = rel.split("/")
         if len(parts) < 2:
             return None
         head, batch = parts[0], parts[1]
-        if head == "embs" and batch.startswith("b_") and batch[2:].isdigit():
-            n = int(batch[2:])
-            for m in cut:
-                top, _, rest = m.partition("/")
-                if not rest:
-                    continue  # root-level marker file, not a state dir
-                if top.startswith("v_") and top[2:].isdigit():
-                    if int(top[2:]) >= n:
-                        return None
-                elif top.startswith("r_"):
-                    bits = top[2:].split("_")
-                    if (
-                        len(bits) == 2
-                        and all(b.isdigit() and b for b in bits)
-                        and int(bits[0]) >= n
-                    ):
-                        return None
-            return f"{head}/{batch}"
-        in_dir_prefix = {
-            "bands": "b_",
-            "cuts": "c_",
-            "windows": "w_",
-            "packs": "p_",
-        }.get(head)
-        if in_dir_prefix is not None:
+        store = _BATCH_STORES.get(head)
+        if store is not None:
             # BATCH dirs only — generation dirs (g_*) commit via the
             # store's central markers/ and their ledgers/dirs are
             # deleted by locked-out maintenance alone, so a vanished
             # g_* must keep raising
-            if not (
-                batch.startswith(in_dir_prefix)
-                and batch[len(in_dir_prefix):].isdigit()
-            ):
+            bid = _batch_id(batch, store.prefix)
+            if bid is None:
                 return None
-            d = f"{head}/{batch}"
-            return (
-                None
-                if any(m.startswith(d + "/") for m in cut)
-                else d
+            # the cut's newest committed version / cut batch
+            proving = []
+            for m in cut:
+                parts = m.split("/")
+                if store.proof == _PROOF_VERSION and len(parts) == 2:
+                    key = _version_key(parts[0])
+                    proving += [key[0]] if key else []
+                elif store.proof == _PROOF_CUT and parts[0] == _CUTS.sub:
+                    cid = _batch_id(parts[1], _CUTS.prefix)
+                    proving += [cid] if cid is not None else []
+            committed = _batch_committed(
+                store, bid, set(cut).__contains__, max(proving, default=None)
             )
+            return None if committed else f"{head}/{batch}"
         if (head == "vectors" and batch.startswith("batch=")) or (
             head == "scale_stats" and batch.startswith("b_")
         ):
@@ -4900,31 +4638,14 @@ def maintenance_gc(spark, snapshot_path: str) -> dict:
     }
     try:
         # crashed holders' staging, everywhere stages can live
-        for parent in [snapshot_path] + [
-            f"{snapshot_path}/{sub}"
-            for sub in ("embs", "bands", "cuts", "windows", "packs")
-        ]:
-            root = jvm.org.apache.hadoop.fs.Path(parent)
-            try:
-                if fs.exists(root):
-                    for st_ in fs.listStatus(root):
-                        name = st_.getPath().getName()
-                        if st_.isDirectory() and name.startswith("_stage_"):
-                            out["stages"] += 1
-                    _sweep_foreign_stages(jvm, fs, parent, token)
-            except Exception:
-                pass
+        out["stages"] = len(_stage_dirs(jvm, fs, snapshot_path))
+        for parent in _stage_parents(snapshot_path):
+            _sweep_foreign_stages(jvm, fs, parent, token)
 
         # flat stores: folded dirs + stale generations, via the same
         # ledger-driven reclamation the compactors end with
-        for sub, prefix in (
-            ("embs", "b_"),
-            ("bands", "b_"),
-            ("cuts", "c_"),
-            ("windows", "w_"),
-            ("packs", "p_"),
-        ):
-            parent = f"{snapshot_path}/{sub}"
+        for store in _BATCH_STORES.values():
+            parent = store.parent(snapshot_path)
             if not fs.exists(jvm.org.apache.hadoop.fs.Path(parent)):
                 continue
             try:
@@ -4933,16 +4654,11 @@ def maintenance_gc(spark, snapshot_path: str) -> dict:
                 continue  # corrupt ledger: gc must not guess — check
                 # reports it, a human decides
             stale = [g for g in gens if g not in live_gens]
-            dirs = []
-            for st_ in fs.listStatus(jvm.org.apache.hadoop.fs.Path(parent)):
-                name = st_.getPath().getName()
-                if (
-                    st_.isDirectory()
-                    and name.startswith(prefix)
-                    and name[len(prefix):].isdigit()
-                    and int(name[len(prefix):]) in folded
-                ):
-                    dirs.append(f"{parent}/{name}")
+            dirs = [
+                p
+                for b, p in _batch_dirs(jvm, fs, parent, store.prefix)
+                if b in folded
+            ]
             if dirs or stale:
                 out["folded_dirs"] += len(dirs)
                 out["stale_generations"] += len(stale)
